@@ -526,7 +526,7 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     cums are strictly increasing (o_totalprice > 0), so max over the
     k-hop subset == max over all prefixes == the chain end — verified
     value-identical to the one-hop form on all 14999 rows at sf0.1,
-    and the one-hop DuckDB oracle is unchanged. Measured 3.91 -> 1.08 s
+    and the one-hop DuckDB oracle is unchanged. Measured 3.91 -> 1.53 s
     (steps ~/8; plan capture in plans/r18)."""
     from hive_task_spark.plans.checkpoints import checkpoint_conservative
 

@@ -34,6 +34,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from hive_task_spark.tables import load
+
 
 def hive_session(base_dir: str, app_name: str = "hive_task_spark_hive") -> SparkSession:
     """A SparkSession with a REAL HiveExternalCatalog persisted under
@@ -64,14 +66,14 @@ def create_tables(spark: SparkSession, sf_dir: str) -> dict[str, int]:
     """Phase 1 of the persistence demo: CTAS a plain table and a
     PARTITIONED table into the Hive metastore from the test parquet.
     Returns row counts for the writer-side assertion."""
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    nation = load(spark, sf_dir, "nation")
     nation.createOrReplaceTempView("nation_src")
     spark.sql("DROP TABLE IF EXISTS hive_nation")
     spark.sql(
         "CREATE TABLE hive_nation USING PARQUET AS "
         "SELECT n_nationkey, n_name, n_regionkey FROM nation_src"
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load(spark, sf_dir, "orders")
     orders.selectExpr(
         "o_orderkey", "o_totalprice", "CAST(year(o_orderdate) AS INT) AS o_year"
     ).createOrReplaceTempView("orders_src")
@@ -95,7 +97,7 @@ def external_table_msck(spark: SparkSession, sf_dir: str, data_dir: str) -> dict
     and everything after — the metadata-only operation that makes
     petabyte backfills atomic-ish (files land, then one DDL publishes
     them)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").selectExpr(
+    orders = load(spark, sf_dir, "orders").selectExpr(
         "o_orderkey", "o_totalprice", "CAST(year(o_orderdate) AS INT) AS o_year"
     )
     spark.sql("DROP TABLE IF EXISTS hive_orders_ext")
@@ -127,9 +129,7 @@ def hiveql_transform(spark: SparkSession, sf_dir: str) -> list[tuple]:
     legacy path — Arrow-batched ``mapInPandas`` (functions/udfs.py)
     does the same job 10-100x faster — but the surface must exist for
     HiveQL workloads to port."""
-    spark.read.parquet(f"{sf_dir}/nation.parquet").createOrReplaceTempView(
-        "nation_t"
-    )
+    load(spark, sf_dir, "nation").createOrReplaceTempView("nation_t")
     out = spark.sql(
         "SELECT TRANSFORM(n_nationkey, n_name) "
         "USING '/bin/cat' AS (k STRING, name STRING) "

@@ -37,7 +37,7 @@ from pyspark.sql.datasource import (
 from hive_task_spark.functions import exact
 from hive_task_spark.plans.session import apply_runtime_conf
 from hive_task_spark.registry import register
-from hive_task_spark.tables import normalize_events_ts
+from hive_task_spark.tables import load, normalize_events_ts, parquet_schema
 
 # Per-process scratch root (hive_task_spark/scratch.py): checkpoint
 # dirs and file-source staging are PID-keyed so a sweep and pytest can
@@ -57,8 +57,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs TIMESTAMP_MICROS NTZ), and a hardcoded LongType read of a MICROS
     column is SILENTLY 1000× off, not a crash. `normalize_events_ts`
     branches on the real dtype either way."""
-    apply_runtime_conf(spark)
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     raw = (
         spark.readStream.schema(batch_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -251,8 +250,6 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_static_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static join: streaming events enriched with the static
     customer dimension (broadcast per micro-batch), then aggregated."""
-    from hive_task_spark.tables import load
-
     s = _events_stream(spark, sf_dir)
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined = s.join(F.broadcast(c), s["user_id"] == c["c_custkey"])
@@ -490,8 +487,6 @@ def stream_zscore_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream only applies it (no unbounded streaming state, no
     watermark needed, append mode). Batch-replay oracle-checked
     end-to-end."""
-    from hive_task_spark.tables import load
-
     stats = (
         load(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -534,8 +529,6 @@ def stream_multibatch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     state-evolution path every other stream here (single file = one
     batch) cannot exercise. Batch-replay oracle: the final complete-
     mode table must equal the one-shot batch aggregate exactly."""
-    from hive_task_spark.tables import load
-
     apply_runtime_conf(spark)
     src_dir = _scratch_join("events_multibatch")
     shutil.rmtree(src_dir, ignore_errors=True)
@@ -588,8 +581,6 @@ def stream_late_drop_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     silent-wrongness class) makes this output explode or vanish — it
     cannot pass silently."""
     import time as _time
-
-    from hive_task_spark.tables import load
 
     apply_runtime_conf(spark)
     src_dir = _scratch_join("events_late_drop")
@@ -838,9 +829,8 @@ def stream_outer_join_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_runtime_conf(spark)
     src_dir = _scratch_join("events_outer_join")
     shutil.rmtree(src_dir, ignore_errors=True)
-    from hive_task_spark.tables import load as _load
 
-    e = _load(spark, sf_dir, "events")
+    e = load(spark, sf_dir, "events")
     cut = "2024-01-21 00:00:00"
     now = _time.time()
     seen: set[str] = set()
@@ -940,8 +930,6 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     is why real systems keep state in an indexed table format and
     merge-on-read instead of rewriting (same join shape either
     way)."""
-    from hive_task_spark.tables import load
-
     apply_runtime_conf(spark)
     src_dir = _scratch_join("events_upsert_src")
     state_root = _scratch_join("upsert_state")
@@ -1044,8 +1032,6 @@ def stream_lambda_backfill_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployments silently double-count or drop the cutover day; the
     path tag keeps the audit explicit. The streaming side filters
     BEFORE aggregating, so its state covers only tail days."""
-    from hive_task_spark.tables import load
-
     apply_runtime_conf(spark)
     e = load(spark, sf_dir, "events")
     day = F.floor(F.col("ts").cast("double") / 86400).cast("long")
@@ -1190,7 +1176,6 @@ def stream_windowed_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     got = _run_to_table(
         spark, agg, "stream_windowed_percentiles", "complete"
     )
-    from hive_task_spark.tables import load
 
     exact = (
         load(spark, sf_dir, "events")
@@ -1316,8 +1301,6 @@ def stream_update_mode_progression(spark: SparkSession, sf_dir: str) -> DataFram
     dashboards (append can't emit running aggregates, complete
     re-ships the world every batch); sink volume is changed-keys per
     batch, not all keys."""
-    from hive_task_spark.tables import load
-
     apply_runtime_conf(spark)
     src_dir = _scratch_join("events_multibatch_upd")
     shutil.rmtree(src_dir, ignore_errors=True)
@@ -1871,8 +1854,6 @@ def stream_state_ttl_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     |expired keys|, not |events|."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from hive_task_spark.tables import load
-
     apply_runtime_conf(spark)
     src_dir = _scratch_join("events_ttl_twobatch")
     shutil.rmtree(src_dir, ignore_errors=True)
@@ -2011,8 +1992,6 @@ def stream_foreachbatch_exactly_once(
     version rewrite here is the harness-sized stand-in. The replay
     orchestration (3 throttled micro-batches + a restart probe) is
     test harness, not production shape."""
-    from hive_task_spark.tables import load
-
     apply_runtime_conf(spark)
     src_dir = _scratch_join("events_eo_src")
     state_root = _scratch_join("eo_state")
@@ -2172,9 +2151,7 @@ def _cohort_stream_src(spark: SparkSession, sf_dir: str, tag: str) -> str:
     src = _scratch_join(f"state_cohorts_{tag}")
     shutil.rmtree(src, ignore_errors=True)
     os.makedirs(src, exist_ok=True)
-    ev = normalize_events_ts(
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-    ).select("user_id", "event_type", "value")
+    ev = load(spark, sf_dir, "events").select("user_id", "event_type", "value")
     import time as _time
 
     now = _time.time()

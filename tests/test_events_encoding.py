@@ -23,9 +23,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hive_task_spark.tables import load, normalize_events_ts
-
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(__file__)), "_scratch")
+from hive_task_spark.tables import TABLES, load, normalize_events_ts, parquet_schema
 
 # The fixture generator writes one month of 2024 events; anything outside
 # a generous bracket means a unit error (1000x off lands in 1970 or 56941).
@@ -54,31 +52,76 @@ def test_load_decodes_current_testdata_into_real_range(spark, sf_dir):
     assert _LO <= row["lo"] <= row["hi"] <= _HI, (row["lo"], row["hi"])
 
 
-@pytest.fixture(scope="module")
-def nanos_events_dir(spark, sf_dir):
-    """Synthesize a legacy TIMESTAMP(NANOS) events.parquet in _scratch
-    from the real fixture, to exercise the nanos branch."""
-    out = os.path.join(_SCRATCH, "events_nanos_fixture")
-    os.makedirs(out, exist_ok=True)
+def _ts_range(df):
+    row = df.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
+    return row["lo"], row["hi"]
+
+
+def _write_events(sf_dir: str, path: str, unit: str) -> None:
+    """Copy the real events fixture to `path` with ts stored as a
+    parquet TIMESTAMP of `unit`. store_schema=False drops the Arrow
+    schema hint so readers see the raw parquet logical type, like the
+    r1-2 (NANOS) and r3+ (MICROS) testdata."""
     tbl = pq.read_table(f"{sf_dir}/events.parquet")
-    ts_ns = tbl.column("ts").cast(pa.timestamp("ns"))
-    tbl = tbl.set_column(tbl.schema.get_field_index("ts"), "ts", ts_ns)
-    # store_schema=False drops the Arrow schema hint so readers see the
-    # raw parquet logical type TIMESTAMP(NANOS), like the r1-2 testdata.
-    pq.write_table(tbl, os.path.join(out, "events.parquet"),
-                   version="2.6", store_schema=False)
-    return out
+    ts = tbl.column("ts").cast(pa.timestamp(unit))
+    tbl = tbl.set_column(tbl.schema.get_field_index("ts"), "ts", ts)
+    pq.write_table(tbl, path, version="2.6", store_schema=False)
 
 
-def test_load_handles_legacy_nanos_encoding(spark, sf_dir, nanos_events_dir):
-    f = pq.read_schema(f"{nanos_events_dir}/events.parquet").field("ts")
-    assert f.type == pa.timestamp("ns"), f.type
-    legacy = load(spark, nanos_events_dir, "events")
+def test_load_handles_legacy_nanos_encoding(spark, sf_dir, tmp_path):
+    """A MICROS file rewritten in place as TIMESTAMP(NANOS) — a testdata
+    regeneration — must be re-inferred, not served the cached MICROS
+    schema (that would read the nanos as microseconds, 1000x off)."""
+    path = str(tmp_path / "events.parquet")
+    _write_events(sf_dir, path, "us")
+    micros = load(spark, str(tmp_path), "events")
+    assert not isinstance(parquet_schema(spark, path)["ts"].dataType, T.LongType)
+    assert isinstance(micros.schema["ts"].dataType, T.TimestampType)
+    micros_range = _ts_range(micros)
+
+    _write_events(sf_dir, path, "ns")
+    assert pq.read_schema(path).field("ts").type == pa.timestamp("ns")
+    legacy = load(spark, str(tmp_path), "events")
+    assert isinstance(parquet_schema(spark, path)["ts"].dataType, T.LongType)
     assert isinstance(legacy.schema["ts"].dataType, T.TimestampType)
-    current = load(spark, sf_dir, "events")
-    lrow = legacy.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
-    crow = current.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
-    assert (lrow["lo"], lrow["hi"]) == (crow["lo"], crow["hi"])
+    assert _ts_range(legacy) == micros_range == _ts_range(load(spark, sf_dir, "events"))
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_cached_schema_equals_inferred_schema(spark, sf_dir, sf):
+    """`load` reads with the cached schema; it must be exactly the one an
+    uncached read infers, field metadata and nullability included."""
+    d = os.path.join(os.path.dirname(sf_dir), sf)
+    if not os.path.isdir(d):
+        pytest.skip(f"no {sf} fixture beside {sf_dir}")
+    for name in TABLES:
+        ref = spark.read.parquet(f"{d}/{name}.parquet")
+        if name == "events":
+            ref = normalize_events_ts(ref)
+        got = load(spark, d, name).schema
+        assert got.jsonValue() == ref.schema.jsonValue(), name
+
+
+def test_warm_load_runs_no_spark_job(spark, sf_dir):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return list(tracker.getJobIdsForGroup(group))
+
+    # the probe sees jobs: an uncached inference is one
+    assert jobs_of("cold_infer_probe",
+                   lambda: spark.read.parquet(f"{sf_dir}/orders.parquet").schema)
+    for name in TABLES:
+        load(spark, sf_dir, name)
+    assert jobs_of("warm_load_probe",
+                   lambda: [load(spark, sf_dir, n).schema for n in TABLES]) == []
 
 
 def test_normalize_is_noop_on_already_timestamp(spark):

@@ -2,7 +2,7 @@
 """Driver-faithful correctness sweep — the round gate as one command.
 
 Runs the registered queries against their DuckDB oracles at sf0.01
-with the driver-exact comparator (tests/compare.py), on one of three
+with the strict comparator (tests/compare.py), on one of four
 session profiles:
 
     vanilla      local[8], no conf — exactly the round driver's session
@@ -10,11 +10,13 @@ session profiles:
     hostileconf  local[5], Asia/Kathmandu, 7 shuffle partitions, AQE off
                  — flushes conf/order-dependent results (verify skill's
                  "deeper probe")
+    hostilesplit local[8], 256 KB scan splits — shatters every scan so
+                 summation-order-dependent float edges show
 
 Scope `window` sweeps only the first 50 names (the driver's audit
 window); `full` sweeps every registered name. Usage:
 
-    python tools/sweep.py [window|full] [vanilla|hostiletz|hostileconf]
+    python tools/sweep.py [window|full] [vanilla|hostiletz|hostileconf|hostilesplit]
 
 Exit code 0 iff zero fails. The per-round recipe (CLAUDE.md
 steady-state step 3) is: `window hostiletz` once, plus one `full
