@@ -1072,7 +1072,7 @@ def dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min/collect_set-then-sort or exact set ops).
     # r18 (ADVICE r17 #4): conservative checkpoint — the plain form
     # advertised 0.96 B/row (26939 rows, 25969 B — the r7 understated
-    # class, caught by the extended _CHECKPOINT_AUDITED guard).
+    # class, caught by the extended CHECKPOINT_AUDITED guard).
     # Winnowed rows scale with the corpus, so no-broadcast is the only
     # plan that survives 100 TB.
     rows = checkpoint_conservative(

@@ -2,9 +2,12 @@
 SURVEY.md §2B LLM ops: brute-force cosine top-k (baseline, oracle-
 checked) + random-hyperplane LSH bucketing (the scale path).
 
-Dot products are pure JVM higher-order expressions
-(``aggregate(zip_with(...))``) — no Python, no UDF, whole-stage
-codegen. At 100 TB: broadcast the (small) query side, keep the corpus
+Per-pair dot products are JVM higher-order expressions
+(``aggregate(zip_with(...))``). Per-row scoring against a frozen plan
+literal (LSH planes, IVF codebook, JL signs, PQ sub-codebooks) and the
+within-cell pair matrix run in mapInArrow / applyInPandas NumPy
+kernels built on the fold helpers below, bit-identical to the HOF
+form. At 100 TB: broadcast the (small) query side, keep the corpus
 partitioned; the LSH variant replaces the crossJoin with a bucket
 equi-join exactly like MinHash banding replaces the pair join.
 """
@@ -13,6 +16,7 @@ from __future__ import annotations
 
 import random
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,6 +53,51 @@ def _norm(vcol):
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
+
+
+# NumPy fold helpers shared by the vector kernels. Module-level, so
+# workers unpickle them by reference (one import of this module).
+#
+# Bit-exactness: the HOF fold ``aggregate(zip_with(a, b, *), 0.0, +)``
+# and the DuckDB oracle's ``list_sum`` both compute
+# ((0.0 + a0*b0) + a1*b1) + ... in ascending dimension order. _fold_dot
+# performs that exact IEEE operation sequence for every output element,
+# merely vectorised over the leading axes; NumPy fuses no multiply-add,
+# so each element's result is unchanged. ``@``, ``einsum`` and
+# ``np.sum`` are not used because they reorder the sum (pairwise or
+# SIMD-blocked accumulation) and move the last bits.
+
+
+def _emb_f64(batch):
+    """The ``embedding`` column of an Arrow batch as an (n, dim) float64
+    matrix: the float32 values widened exactly, as ``CAST(x AS DOUBLE)``
+    does in Spark and DuckDB."""
+    emb = batch.column(batch.schema.get_field_index("embedding"))
+    return (
+        np.asarray(emb.flatten(), dtype=np.float32)
+        .astype(np.float64)
+        .reshape(batch.num_rows, -1)
+    )
+
+
+def _fold_dot(a, b):
+    """Dot over the last axis, broadcasting the leading axes, summed in
+    ascending order from a 0.0 seed: ``_fold_dot(u[:, None, :],
+    cb[None, :, :])`` is the (n, k) centroid-dot matrix and
+    ``np.sqrt(_fold_dot(x, x))`` the row norm."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for i in range(a.shape[-1]):
+        acc += a[..., i] * b[..., i]
+    return acc
+
+
+def _argmax_first(dots):
+    """Row-wise ``(best, cid)`` of an (n, k) dot matrix: ``best`` is the
+    row max and ``cid`` the LOWEST index equal to it (the
+    ``ORDER BY dot DESC, cid`` tie-break). A row holding a NaN has a NaN
+    ``best``; nothing compares equal to it, so ``cid`` is 0."""
+    best = dots.max(axis=1)
+    return best, np.argmax(dots == best[:, None], axis=1).astype(np.int32)
 
 
 _ORACLE_TOPK = f"""
@@ -182,6 +231,48 @@ _ORACLE_ANN_LSH = f"""
 """
 
 
+def _lsh_bucket_frame(e):
+    """(vec_id, vec, nrm, buckets[L]) via ONE mapInArrow NumPy kernel,
+    localCheckpoint'ed so the corpus and query branches read it once
+    (r18; it replaced 8x4 interpreted zip_with/aggregate folds per row,
+    evaluated once per branch). vec is the float->double cast, nrm and
+    the 32 plane dots are _fold_dot folds, and bucket t packs plane p's
+    sign bit at 1 << p (integer-exact). NaN posture: a NaN dot SETS its
+    bit, as ``CASE WHEN dot > 0`` does in Spark and DuckDB, which both
+    order NaN above every value (NumPy's ``NaN > 0`` is false). The
+    per-candidate cosine stays the JVM HOF over the passed-through vec."""
+    pl = np.array(_PLANES, dtype=np.float64)  # L x P x dim
+    bit = 1 << np.arange(_N_PLANES)
+
+    def _batches(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            x = _emb_f64(b)
+            d = _fold_dot(x[:, None, None, :], pl[None])  # n x L x P
+            buckets = (((d > 0) | np.isnan(d)) * bit).sum(axis=2, dtype=np.int32)
+            yield pa.record_batch(
+                [
+                    b.column(b.schema.get_field_index("vec_id")),
+                    pa.array(x.tolist(), type=pa.list_(pa.float64())),
+                    pa.array(np.sqrt(_fold_dot(x, x))),
+                    pa.array(buckets.tolist(), type=pa.list_(pa.int32())),
+                ],
+                names=["vec_id", "vec", "nrm", "buckets"],
+            )
+
+    return (
+        e.select("vec_id", "embedding")
+        .mapInArrow(
+            _batches,
+            "vec_id long, vec array<double>, nrm double, buckets array<int>",
+        )
+        .localCheckpoint()
+    )
+
+
 @register("similarity_ann_lsh", oracle=_ORACLE_ANN_LSH)
 def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via multi-table random-hyperplane sign-LSH: 8 tables × 4-bit
@@ -199,68 +290,7 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall-bounded.
     """
     e = load(spark, sf_dir, "embeddings")
-    # r18 (guide §4.2, the kmeans recipe): the per-table bucket ids
-    # were 8x4 = 32 interpreted zip_with/aggregate dot folds per row —
-    # and the lazy frame fed BOTH the corpus and the query branches, so
-    # they evaluated twice. One mapInArrow NumPy kernel computes vec
-    # (the same float->double cast), nrm and all 32 dots with the
-    # fold's exact IEEE op sequence (dimension-by-dimension from a 0.0
-    # seed), packs the sign bits little-endian (integer-exact), and is
-    # checkpointed once for both branches. The per-candidate cosine
-    # stays the JVM HOF over the passed-through vec — unchanged
-    # expressions, so the edge is bit-identical.
-    import numpy as np
-
-    plane_rows = [
-        [list(map(float, plane)) for plane in table] for table in _PLANES
-    ]
-    dim = len(plane_rows[0][0])
-
-    def _bucket_batches(batches):
-        import pyarrow as pa
-
-        pl = np.array(plane_rows, dtype=np.float64)  # T x P x dim
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            emb = b.column(b.schema.get_field_index("embedding"))
-            x = (
-                np.asarray(emb.flatten(), dtype=np.float32)
-                .astype(np.float64)
-                .reshape(n, dim)
-            )
-            acc = np.zeros(n, dtype=np.float64)
-            for i in range(dim):  # sequential in i == the HOF fold
-                acc += x[:, i] * x[:, i]
-            nrm = np.sqrt(acc)
-            buckets = np.zeros((n, _N_TABLES), dtype=np.int32)
-            for t in range(_N_TABLES):
-                for p in range(_N_PLANES):
-                    d = np.zeros(n, dtype=np.float64)
-                    for i in range(dim):
-                        d += x[:, i] * pl[t, p, i]
-                    buckets[:, t] += np.where(d > 0, 1 << p, 0).astype(
-                        np.int32
-                    )
-            yield pa.record_batch(
-                [
-                    b.column(b.schema.get_field_index("vec_id")),
-                    pa.array(x.tolist(), type=pa.list_(pa.float64())),
-                    pa.array(nrm),
-                    pa.array(buckets.tolist(), type=pa.list_(pa.int32())),
-                ],
-                names=["vec_id", "vec", "nrm", "buckets"],
-            )
-
-    with_buckets = (
-        e.select("vec_id", "embedding")
-        .mapInArrow(
-            _bucket_batches,
-            "vec_id long, vec array<double>, nrm double, buckets array<int>",
-        )
-        .localCheckpoint()
-    )
+    with_buckets = _lsh_bucket_frame(e)
     corpus = with_buckets.select(
         "vec_id",
         "vec",
@@ -588,44 +618,22 @@ def _unit_dots_frame(e):
     """(vec_id, uvec, dots[K]) for the frozen IVF codebook via ONE
     mapInArrow NumPy kernel, localCheckpoint'ed so every consumer
     branch (inverted lists, query probes, ground truth) reads the
-    materialized rows instead of re-running the folds (r18; guide
-    §4.2). Bit-exact to the interpreted zip_with/aggregate form: the
-    norm and every centroid dot accumulate DIMENSION-BY-DIMENSION from
-    a 0.0 seed (the HOF fold's IEEE op sequence, vectorized across
-    rows), and uvec divides elementwise like transform(x -> x/nrm).
-    Downstream argmax/rank logic stays Spark (posexplode + window over
-    K dots/row), ordering bit-identical values identically."""
-    import numpy as np
-
-    dim = len(_IVF_CODEBOOK[0])
-    n_cent = len(_IVF_CODEBOOK)
-    cb_rows = [list(map(float, c)) for c in _IVF_CODEBOOK]
+    materialized rows instead of re-running the folds (r18). The norm
+    and the K centroid dots are _fold_dot folds, and uvec divides
+    elementwise like transform(x -> x/nrm), so all three equal the
+    interpreted zip_with/aggregate form bit for bit. Argmax/rank logic
+    stays Spark (posexplode + window over the K dots of a row)."""
+    cb = np.array(_IVF_CODEBOOK, dtype=np.float64)
 
     def _batches(batches):
         import pyarrow as pa
 
-        cb = np.array(cb_rows, dtype=np.float64)
         for b in batches:
-            n = b.num_rows
-            if n == 0:
+            if b.num_rows == 0:
                 continue
-            emb = b.column(b.schema.get_field_index("embedding"))
-            x = (
-                np.asarray(emb.flatten(), dtype=np.float32)
-                .astype(np.float64)
-                .reshape(n, dim)
-            )
-            acc = np.zeros(n, dtype=np.float64)
-            for i in range(dim):  # sequential in i == the HOF fold
-                acc += x[:, i] * x[:, i]
-            nrm = np.sqrt(acc)
-            u = x / nrm[:, None]
-            dots = np.empty((n, n_cent), dtype=np.float64)
-            for c in range(n_cent):
-                a = np.zeros(n, dtype=np.float64)
-                for i in range(dim):
-                    a += u[:, i] * cb[c, i]
-                dots[:, c] = a
+            x = _emb_f64(b)
+            u = x / np.sqrt(_fold_dot(x, x))[:, None]
+            dots = _fold_dot(u[:, None, :], cb[None])
             yield pa.record_batch(
                 [
                     b.column(b.schema.get_field_index("vec_id")),
@@ -715,10 +723,8 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_properties.py."""
     from pyspark.sql import Window
 
-    # r18: assignment dots come from the shared _unit_dots_frame Arrow
-    # kernel (bit-exact to the old crossJoin + interpreted HOF dot —
-    # see the helper); ranking stays a Spark window over the exploded
-    # K dots per row.
+    # Assignment dots come from the shared _unit_dots_frame kernel;
+    # ranking stays a Spark window over the exploded K dots per row.
     e = load(spark, sf_dir, "embeddings")
     ud = _unit_dots_frame(e)
 
@@ -879,74 +885,37 @@ def similarity_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground-truth label with its support (purity numerator).
 
     Scale shape: the codebook is a PLAN LITERAL; the corpus is scored
-    in a single map stage (16 dots/row via in-row transform + argmax,
-    zero scoring shuffle) and shuffles ONCE on cluster id for the
-    stats — the centroid-assign pattern `train_ivf_codebook` iterates,
-    run once. The label-majority window runs over ≤ K×|labels| rows."""
-    from pyspark.sql import Window
-
+    in a single map stage (a mapInArrow NumPy kernel: 16 dots/row +
+    argmax, zero scoring shuffle) and shuffles ONCE on cluster id for
+    the stats — the centroid-assign pattern `train_ivf_codebook`
+    iterates, run once. The label-majority window runs over
+    ≤ K×|labels| rows."""
     from pyspark.sql import Window
 
     e = load(spark, sf_dir, "embeddings")
     # Scoring is a pure map stage (NO shuffle, NO window, NO per-row
-    # candidate set). r17 (guide §4.2): the per-row kernel moves from
-    # 16 interpreted zip_with/aggregate HOF folds to ONE mapInArrow
-    # batch kernel — NumPy accumulating dimension-by-dimension with a
-    # 0.0 seed, which is BIT-IDENTICAL to the HOF fold per row
-    # (((0.0 + u0*c0) + u1*c1) + ... — same IEEE op sequence,
-    # vectorized across rows instead of interpreted per element) and
-    # to the DuckDB oracle's list_sum; argmax keeps the exact
-    # greatest()/first-equal tie-break (dot DESC, cid ASC). NaN (only
-    # possible from a zero-norm embedding, none in the data) is pinned
-    # to the pre-r17 Spark semantics by an explicit isnan guard below —
-    # NumPy equality alone would diverge there (ADVICE r17 #1).
-    # Measured 1.46 s -> (see OPTIMIZATION_r17.md) at sf0.1; two
-    # rejected JVM forms for the record: 16 fully-unrolled 64-term
-    # codegen chains spent 7 s in analysis/codegen of the ~2k-node
-    # tree, and crossJoin+rank ships a 16x-expanded row stream
-    # through an exchange. Only the three needed columns cross the
-    # Python boundary (guide §4.1).
-    import numpy as np
-
-    dim = len(_IVF_CODEBOOK[0])
-    n_cent = len(_IVF_CODEBOOK)
-    cb_rows = [list(map(float, c)) for c in _IVF_CODEBOOK]
+    # candidate set): one mapInArrow kernel (r17) replaces 16
+    # interpreted zip_with/aggregate folds per row; the dots are
+    # _fold_dot folds. Tie-break: the lowest cid among equal dots
+    # (dot DESC, cid ASC). NaN posture (ADVICE r17 #1): a zero-norm
+    # embedding (none in the data) makes every dot NaN, and
+    # _argmax_first gives it cid 0, the pre-r17 Spark when-chain's
+    # answer (NaN = NaN is true in Spark SQL equality). Two rejected
+    # JVM forms for the record: 16 fully-unrolled 64-term codegen
+    # chains spent 7 s in analysis/codegen of the ~2k-node tree, and
+    # crossJoin+rank ships a 16x-expanded row stream through an
+    # exchange. Only the three needed columns cross the Python boundary.
+    cb = np.array(_IVF_CODEBOOK, dtype=np.float64)
 
     def _score_batches(batches):
         import pyarrow as pa
 
-        cb = np.array(cb_rows, dtype=np.float64)
         for b in batches:
-            n = b.num_rows
-            if n == 0:
+            if b.num_rows == 0:
                 continue
-            emb = b.column(b.schema.get_field_index("embedding"))
-            x32 = np.asarray(emb.flatten(), dtype=np.float32)
-            x = x32.astype(np.float64).reshape(n, dim)
-            acc = np.zeros(n, dtype=np.float64)
-            for i in range(dim):  # sequential in i == the HOF fold order
-                acc += x[:, i] * x[:, i]
-            nrm = np.sqrt(acc)
-            u = x / nrm[:, None]
-            dots = np.empty((n_cent, n), dtype=np.float64)
-            for c in range(n_cent):
-                a = np.zeros(n, dtype=np.float64)
-                for i in range(dim):
-                    a += u[:, i] * cb[c, i]
-                dots[c] = a
-            best = dots[0].copy()
-            for c in range(1, n_cent):
-                best = np.maximum(best, dots[c])
-            cid = np.full(n, -1, dtype=np.int32)
-            for c in range(n_cent - 1, -1, -1):  # low index wins ties
-                cid = np.where(dots[c] == best, np.int32(c), cid)
-            # Zero-norm guard (ADVICE r17 #1): 0/0 normalization makes
-            # every dot NaN, and NumPy's NaN != NaN would leave cid=-1
-            # where the pre-r17 Spark when-chain (NaN = NaN is true in
-            # Spark SQL equality) assigned centroid 0. No zero-norm
-            # vector exists in the data; the guard pins the old
-            # semantics instead of claiming identical NaN propagation.
-            cid = np.where(np.isnan(best), np.int32(0), cid)
+            x = _emb_f64(b)
+            u = x / np.sqrt(_fold_dot(x, x))[:, None]
+            best, cid = _argmax_first(_fold_dot(u[:, None, :], cb[None]))
             yield pa.record_batch(
                 [
                     b.column(b.schema.get_field_index("vec_id")),
@@ -1047,55 +1016,31 @@ def similarity_dim_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     check that validates it).
 
     Scale shape: pure map stage — the 8x64 sign matrix lives in the
-    plan as a literal (no join, no shuffle, no Python); each row costs
-    8 fused zip_with/aggregate dot products in whole-stage codegen.
+    plan as a literal (no join, no shuffle); one mapInArrow NumPy
+    kernel computes the input norm and the 8 projection dots per row.
     At 100 TB this runs at scan speed and cuts downstream ANN shuffle
     payload 8x, the same payload discipline as the LSH band keys."""
     from hive_task_spark.functions.arrays import _djoin
 
     e = load(spark, sf_dir, "embeddings")
-    # r18 (guide §4.2, the kmeans recipe): the 8 projection dots + the
-    # input norm were interpreted zip_with/aggregate folds per row; one
-    # mapInArrow NumPy kernel computes them with the fold's exact IEEE
-    # op sequence (dimension-by-dimension from 0.0 seeds), then scales
-    # by the same 1/sqrt(k) literal. The proj-norm fold, the 6dp round
-    # and the serialized array edge stay in Spark on the bit-identical
-    # values.
-    import numpy as np
-
-    sign_rows = [list(map(float, row)) for row in _JL_SIGNS]
+    # r18: the norm and the 8 projection dots are _fold_dot folds,
+    # scaled by the same 1/sqrt(k) literal; the proj-norm fold, the
+    # 6dp round and the serialized array edge stay in Spark.
+    sm = np.array(_JL_SIGNS, dtype=np.float64)  # k x dim
     jl_scale = float(_JL_SCALE)
 
     def _jl_batches(batches):
         import pyarrow as pa
 
-        sm = np.array(sign_rows, dtype=np.float64)  # k x dim
-        k = sm.shape[0]
         for b in batches:
-            n = b.num_rows
-            if n == 0:
+            if b.num_rows == 0:
                 continue
-            emb = b.column(b.schema.get_field_index("embedding"))
-            x = (
-                np.asarray(emb.flatten(), dtype=np.float32)
-                .astype(np.float64)
-                .reshape(n, -1)
-            )
-            dim = x.shape[1]
-            acc = np.zeros(n, dtype=np.float64)
-            for i in range(dim):  # sequential in i == the HOF fold
-                acc += x[:, i] * x[:, i]
-            nrm = np.sqrt(acc)
-            proj = np.empty((n, k), dtype=np.float64)
-            for r in range(k):
-                a = np.zeros(n, dtype=np.float64)
-                for i in range(dim):
-                    a += x[:, i] * sm[r, i]
-                proj[:, r] = a * jl_scale
+            x = _emb_f64(b)
+            proj = _fold_dot(x[:, None, :], sm[None]) * jl_scale
             yield pa.record_batch(
                 [
                     b.column(b.schema.get_field_index("vec_id")),
-                    pa.array(nrm),
+                    pa.array(np.sqrt(_fold_dot(x, x))),
                     pa.array(proj.tolist(), type=pa.list_(pa.float64())),
                 ],
                 names=["vec_id", "nrm", "proj"],
@@ -1290,54 +1235,32 @@ def similarity_product_quantization(spark: SparkSession, sf_dir: str) -> DataFra
     fold, so codes match exactly and the summed error is bit-stable
     before its 6dp rounding."""
     e = load(spark, sf_dir, "embeddings")
-    # r17 (guide §4.2, the kmeans_assign pattern): the 64 interpreted
-    # zip_with/aggregate subspace-distance folds move into ONE
-    # mapInArrow NumPy kernel. Bit-exact by construction: distances
-    # accumulate dimension-by-dimension from a 0.0 seed (the HOF fold's
-    # IEEE op sequence, vectorized across rows), the argmin replays the
+    # r17: one mapInArrow NumPy kernel replaces the 64 interpreted
+    # zip_with/aggregate subspace-distance folds. Each distance is the
+    # _fold_dot of the difference with itself, the argmin replays the
     # exact <=-chain tie-break, and the reconstruction error sums the
     # per-subspace minima in ascending-s order from a 0.0 seed. The 6dp
-    # rounding and the code-string assembly stay in Spark, so the edge
-    # is unchanged. Only (vec_id, embedding) cross the Python boundary.
-    # NaN note (ADVICE r17 #1): a NaN embedding component poisons ALL
-    # four codeword distances of its subspace equally, so the <=-chain
-    # (all comparisons false -> code 3) and np.minimum (NaN err) match
-    # the pre-r17 when-chain/F.least behavior exactly; the partial-NaN
-    # case where F.least skips NaN cannot arise (codebook is literal,
-    # finite). No guard needed, unlike the kmeans cid path.
-    import numpy as np
-
-    cb_rows = [
-        [list(map(float, _PQ_CB[s][c])) for c in range(_PQ_K)]
-        for s in range(_PQ_M)
-    ]
-    m, k, subdim = _PQ_M, _PQ_K, _PQ_SUBDIM
-    dim = m * subdim
+    # rounding and the code-string assembly stay in Spark. NaN posture
+    # (ADVICE r17 #1): a NaN component poisons all four distances of
+    # its subspace equally, so the <=-chain (all false -> code 3) and
+    # np.minimum (NaN err) match the when-chain/F.least form; the
+    # partial-NaN case where F.least skips NaN cannot arise (the
+    # codebook is a finite literal).
+    cb = np.array(_PQ_CB, dtype=np.float64)  # (m, k, subdim)
+    m, subdim = _PQ_M, _PQ_SUBDIM
 
     def _pq_batches(batches):
         import pyarrow as pa
 
-        cb = np.array(cb_rows, dtype=np.float64)  # (m, k, subdim)
         for b in batches:
-            n = b.num_rows
-            if n == 0:
+            if b.num_rows == 0:
                 continue
-            emb = b.column(b.schema.get_field_index("embedding"))
-            x = (
-                np.asarray(emb.flatten(), dtype=np.float32)
-                .astype(np.float64)
-                .reshape(n, dim)
-            )
-            err = np.zeros(n, dtype=np.float64)
+            x = _emb_f64(b)
+            err = np.zeros(b.num_rows)
             code_cols = []
             for s in range(m):
-                d = np.empty((k, n), dtype=np.float64)
-                for c in range(k):
-                    acc = np.zeros(n, dtype=np.float64)
-                    for i in range(subdim):  # ascending-dimension fold
-                        diff = x[:, s * subdim + i] - cb[s, c, i]
-                        acc += diff * diff
-                    d[c] = acc
+                diff = x[:, None, s * subdim : (s + 1) * subdim] - cb[s][None]
+                d = _fold_dot(diff, diff).T  # k x n
                 c0 = (d[0] <= d[1]) & (d[0] <= d[2]) & (d[0] <= d[3])
                 c1 = ~c0 & (d[1] <= d[2]) & (d[1] <= d[3])
                 c2 = ~c0 & ~c1 & (d[2] <= d[3])
@@ -2576,8 +2499,6 @@ def similarity_pca_power_iteration(
     # the join-agg's). The power iterations stay DataFrame algebra on
     # the d² cell table — the 100 TB shape is unchanged (one corpus
     # pass for moments, iterations on d² cells).
-    import numpy as np
-
     def _moment_batches(batches):
         import pyarrow as pa
 
@@ -2585,12 +2506,7 @@ def similarity_pca_power_iteration(
             nb = b.num_rows
             if nb == 0:
                 continue
-            emb = b.column(b.schema.get_field_index("embedding"))
-            x = (
-                np.asarray(emb.flatten(), dtype=np.float32)
-                .astype(np.float64)
-                .reshape(nb, -1)
-            )
+            x = _emb_f64(b)
             d = x.shape[1]
             s2 = x.T @ x  # d x d uncentered second-moment partial
             s1 = x.sum(axis=0)
@@ -3084,8 +3000,6 @@ def similarity_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # continuation of the shorter one's identical IEEE sequence, so
     # every cosine is bit-identical to the sliced HOF (and the DuckDB
     # twin). The per-(dim, query) ranking window is unchanged.
-    import numpy as np
-
     mrl_dims = list(_MRL_DIMS)
 
     def _prefix_cosines(batches):
@@ -3334,55 +3248,26 @@ def similarity_reciprocal_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFram
     (identical doubles both engines); argmax ties break on centroid /
     neighbor id; only the displayed cosine is rounded."""
     e = load(spark, sf_dir, "embeddings")
-    # r18 (guide §4.2 — the kmeans/PQ Arrow recipe extended to PAIR
-    # scoring, measured 2.73 -> see OPTIMIZATION_r18.md): both the
-    # centroid assignment (16 interpreted HOF dot folds per row) and
-    # the within-cell pair scoring (one interpreted 64-step fold per
-    # PAIR, ~250k pairs) move into NumPy kernels that accumulate
-    # DIMENSION-BY-DIMENSION from a 0.0 seed — the HOF fold's exact
-    # IEEE op sequence, vectorized across rows/pairs, so every dot is
-    # bit-identical to the previous plan and to the DuckDB oracle's
-    # list_sum. Tie-breaks replay exactly: assignment argmax keeps the
-    # lowest cid among equal dots (NaN pinned to cid 0, the Spark
-    # window's NaN-first order — same guard as kmeans_assign); the
-    # per-src top-1 sorts candidates by dst ascending and takes the
+    # r18 (measured 2.73 -> see OPTIMIZATION_r18.md): the centroid
+    # assignment (16 interpreted HOF dot folds per row) and the
+    # within-cell pair scoring (one interpreted 64-step fold per PAIR,
+    # ~250k pairs) are NumPy kernels on _fold_dot. Assignment keeps the
+    # lowest cid among equal dots; a NaN row gets cid 0, the Spark
+    # window's NaN-first order (dot DESC puts NaN first, then cid ASC).
+    # The per-src top-1 sorts candidates by dst ascending and takes the
     # FIRST maximum (cosine DESC, dst ASC). The reciprocity self-join
-    # and the 6dp edge stay in Spark, unchanged.
-    import numpy as np
-
-    dim = len(_IVF_CODEBOOK[0])
-    n_cent = len(_IVF_CODEBOOK)
-    cb_rows = [list(map(float, c)) for c in _IVF_CODEBOOK]
+    # and the 6dp edge stay in Spark.
+    cb = np.array(_IVF_CODEBOOK, dtype=np.float64)
 
     def _assign_batches(batches):
         import pyarrow as pa
 
-        cb = np.array(cb_rows, dtype=np.float64)
         for b in batches:
-            n = b.num_rows
-            if n == 0:
+            if b.num_rows == 0:
                 continue
-            emb = b.column(b.schema.get_field_index("embedding"))
-            x32 = np.asarray(emb.flatten(), dtype=np.float32)
-            x = x32.astype(np.float64).reshape(n, dim)
-            acc = np.zeros(n, dtype=np.float64)
-            for i in range(dim):  # sequential in i == the HOF fold
-                acc += x[:, i] * x[:, i]
-            nrm = np.sqrt(acc)
-            u = x / nrm[:, None]
-            dots = np.empty((n_cent, n), dtype=np.float64)
-            for c in range(n_cent):
-                a = np.zeros(n, dtype=np.float64)
-                for i in range(dim):
-                    a += u[:, i] * cb[c, i]
-                dots[c] = a
-            best = dots[0].copy()
-            for c in range(1, n_cent):
-                best = np.maximum(best, dots[c])
-            cid = np.full(n, -1, dtype=np.int32)
-            for c in range(n_cent - 1, -1, -1):  # low cid wins ties
-                cid = np.where(dots[c] == best, np.int32(c), cid)
-            cid = np.where(np.isnan(best), np.int32(0), cid)
+            x = _emb_f64(b)
+            u = x / np.sqrt(_fold_dot(x, x))[:, None]
+            _, cid = _argmax_first(_fold_dot(u[:, None, :], cb[None]))
             yield pa.record_batch(
                 [
                     b.column(b.schema.get_field_index("vec_id")),
@@ -3414,10 +3299,7 @@ def similarity_reciprocal_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFram
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
         u = np.stack(pdf["uvec"].to_numpy())
-        cos = np.zeros((m, m), dtype=np.float64)
-        for i in range(u.shape[1]):  # per-pair fold, sequential in i
-            col = u[:, i]
-            cos += col[:, None] * col[None, :]
+        cos = _fold_dot(u[:, None, :], u[None, :, :])  # m x m pair dots
         np.fill_diagonal(cos, -np.inf)  # src != dst
         j = np.argmax(cos, axis=1)  # first max == lowest dst on ties
         return pd.DataFrame(

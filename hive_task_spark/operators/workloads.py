@@ -527,7 +527,7 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-hop subset == max over all prefixes == the chain end — verified
     value-identical to the one-hop form on all 14999 rows at sf0.1,
     and the one-hop DuckDB oracle is unchanged. Measured 3.91 -> 1.53 s
-    (steps ~/8; plan capture in plans/r18)."""
+    (steps ~/8; plan capture in plans/r18/ at commit b6b689b)."""
     from hive_task_spark.plans.checkpoints import checkpoint_conservative
 
     k_hops = 8

@@ -125,12 +125,24 @@ AUDITED = [
 # bytes/row, and the pre-checkpoint build-plan summary — closing the
 # r7 blind spot (an understated checkpoint estimate flipped AQE joins
 # to broadcasting a 1.2M-row edge list; see plans/checkpoints.py).
+# tests/test_plans.py enforces the stats invariants over this list.
 CHECKPOINT_AUDITED = [
     "dedup_minhash_lsh",
     "analytics_triangle_count",
     "analytics_kcore",
     "similarity_kmeans_assign",
     "analytics_louvain_one_level",
+    # r17: winnowing's plain localCheckpoint was the one path still
+    # exposed to the r7 understatement class; the other three use
+    # conservative checkpoints.
+    "dedup_winnowing_pairs",
+    "analytics_pagerank_lite",
+    "analytics_graph_modularity",
+    "sql_recursive_cte",
+    # r18 vector cohort: the Arrow kernels' checkpointed outputs.
+    "similarity_ann_lsh",
+    "similarity_ann_ivf",
+    "similarity_reciprocal_nn_pairs",
 ]
 
 
@@ -168,7 +180,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
         "artifact records the current POST-AQE final-plan numbers for review",
         "(e.g. q21's sort-merge join converts to broadcast at runtime).",
         "Queries that materialize shared subtrees via localCheckpoint",
-        "(minhash, triangle, kcore, kmeans, louvain) report only their",
+        "(minhash, triangle, kcore, kmeans, louvain, ...) report only their",
         "post-checkpoint segment in the table below — their eager build",
         "stages are audited separately in the 'Checkpointed intermediates'",
         "section (rows, advertised stats, bytes/row, build-plan summary).",

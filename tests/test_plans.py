@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 
 from hive_task_spark import registry
+from hive_task_spark.plans.audit import CHECKPOINT_AUDITED
 
 registry.load_all()
 
@@ -455,23 +456,6 @@ def test_equidepth_cutpoints_no_total_order_exchange(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan  # 1-row cutpoint crossJoin
 
 
-_CHECKPOINT_AUDITED = [
-    "dedup_minhash_lsh",
-    "analytics_triangle_count",
-    "analytics_kcore",
-    "similarity_kmeans_assign",
-    "analytics_louvain_one_level",
-    # r17 additions (ADVICE r17 #4): the round's new checkpointed
-    # intermediates join the class-wide audit — winnowing's PLAIN
-    # localCheckpoint is the one path still exposed to the r7
-    # understatement class, the other three use conservative
-    # checkpoints (waived from the overstatement bound below).
-    "dedup_winnowing_pairs",
-    "analytics_pagerank_lite",
-    "analytics_graph_modularity",
-    "sql_recursive_cte",
-]
-
 # Checkpointed intermediates that are dimension-scale BY DESIGN, so a
 # small (even mildly understated) estimate is the truth and downstream
 # broadcast is the intended plan. Measured to justify each entry;
@@ -520,7 +504,7 @@ _OVERSTATED_WAIVED = {
 }
 
 
-@pytest.mark.parametrize("name", _CHECKPOINT_AUDITED)
+@pytest.mark.parametrize("name", CHECKPOINT_AUDITED)
 def test_checkpointed_intermediates_not_broadcast_bait(spark, sf_dir, name):
     """Class-wide generalization of the co-purchase edge-stats guard
     (the r7 regression): EVERY localCheckpoint'ed intermediate these
@@ -767,6 +751,63 @@ def test_unit_dots_kernel_bit_exact_vs_hof(spark, sf_dir):
         ku, kd = got[r["vec_id"]]
         assert ku == list(r["uvec"])  # exact, no tolerance
         assert kd == list(r["dots"])
+
+
+def _nan_zero_embeddings(spark):
+    """A zero vector, NaN components first and last, and one plain
+    vector: the rows where NumPy and SQL comparison semantics part."""
+    nan = float("nan")
+    rows = [
+        (0, [0.0] * 64),
+        (1, [nan] + [0.1] * 63),
+        (2, [0.2] * 63 + [nan]),
+        (3, [0.01 * (i % 7 - 3) for i in range(64)]),
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+@pytest.mark.parametrize("source", ["embeddings", "nan_zero"])
+def test_lsh_bucket_kernel_bit_exact_vs_hof(spark, sf_dir, source):
+    """_lsh_bucket_frame's bucket ids and norms must equal the HOF form
+    ``CASE WHEN _dot(vec, plane) > 0`` exactly, NaN rows included:
+    Spark orders NaN above every value, so a NaN dot sets its bit."""
+    from pyspark.sql import functions as F
+
+    from hive_task_spark.operators.similarity import (
+        _PLANES,
+        _dot,
+        _lsh_bucket_frame,
+        _norm,
+        _vec_d,
+    )
+    from hive_task_spark.tables import load
+
+    e = (
+        load(spark, sf_dir, "embeddings")
+        if source == "embeddings"
+        else _nan_zero_embeddings(spark)
+    )
+    got = {
+        r["vec_id"]: (list(r["buckets"]), repr(r["nrm"]))
+        for r in _lsh_bucket_frame(e).collect()
+    }
+    vec = _vec_d()
+    ref_buckets = F.array(
+        *[
+            sum(
+                F.when(
+                    _dot(vec, F.array(*[F.lit(x) for x in plane])) > 0, 1 << p
+                ).otherwise(0)
+                for p, plane in enumerate(table)
+            )
+            for table in _PLANES
+        ]
+    )
+    ref = e.select("vec_id", ref_buckets.alias("buckets"), _norm(vec).alias("nrm"))
+    ref_rows = ref.collect()
+    assert len(ref_rows) == len(got) > 0
+    for r in ref_rows:
+        assert got[r["vec_id"]] == (list(r["buckets"]), repr(r["nrm"]))
 
 
 def test_recursive_cte_khop_equals_one_hop(spark, sf_dir):
