@@ -656,7 +656,6 @@ def date_iso_week_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "date_time_type_suite",
-    defer=True,
     oracle="""
     WITH t AS (SELECT event_type, CAST(ts AS TIME) AS tod FROM events)
     SELECT event_type,

@@ -166,7 +166,6 @@ def json_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "json_variant_explode_lateral",
-    defer=True,
     oracle="""
     WITH src AS (
       SELECT c_custkey,

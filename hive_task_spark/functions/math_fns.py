@@ -234,7 +234,6 @@ def math_decimal_exact_money(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     WHERE l_orderkey < 200
     """,
-    defer=True,
 )
 def math_try_arithmetic_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The try_* ANSI-safe arithmetic family (Spark 3.2+): try_divide /

@@ -1062,7 +1062,6 @@ def agg_approx_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(x) AS lo, max(x) AS hi
     FROM t GROUP BY bucket
     """,
-    defer=True,
 )
 def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-depth (equal-frequency) histogram of l_extendedprice via
@@ -1122,7 +1121,6 @@ def agg_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(x) AS lo, max(x) AS hi
     FROM b GROUP BY bucket
     """,
-    defer=True,
 )
 def agg_equidepth_cutpoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB path `agg_equidepth_histogram`'s docstring promises:
@@ -1194,7 +1192,6 @@ def agg_equidepth_cutpoints(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(DISTINCT c_custkey) AS BIGINT) AS n_distinct
     FROM customer GROUP BY c_mktsegment
     """,
-    defer=True,
 )
 def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct counting via the Spark 3.5+ bitmap builtins:
@@ -1230,7 +1227,6 @@ def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
                             (l_returnflag), (l_linestatus), ())
     """,
-    defer=True,
 )
 def agg_grouping_id_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING() indicator flags over GROUPING SETS — the mechanism
@@ -1265,7 +1261,6 @@ def agg_grouping_id_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
            quantile_disc(l_quantity, 0.9)            AS p90_disc
     FROM lineitem GROUP BY l_returnflag
     """,
-    defer=True,
 )
 def agg_percentile_cont_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERCENTILE_CONT vs PERCENTILE_DISC side by side — interpolated
@@ -1303,7 +1298,6 @@ def agg_percentile_cont_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag
     """,
-    defer=True,
 )
 def agg_crosstab_contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`df.stat.crosstab` — the contingency-table API: pairwise
@@ -1475,7 +1469,6 @@ def agg_dense_report_scaffold(spark: SparkSession, sf_dir: str) -> DataFrame:
            'l_tax', CAST(l_tax AS DOUBLE)
     FROM lineitem WHERE l_orderkey < 300
     """,
-    defer=True,
 )
 def agg_melt_unpivot_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`DataFrame.melt` (Spark 3.4's unpivot API) — the third unpivot
@@ -1668,7 +1661,6 @@ def agg_weighted_mean_var(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_theta_sketch_setops",
-    defer=True,
     oracle="""
     WITH a AS (SELECT DISTINCT o_custkey FROM orders
                WHERE o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
@@ -1740,7 +1732,6 @@ def agg_theta_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_approx_top_k_partial_algebra",
-    defer=True,
     oracle="""
     SELECT event_type             AS item,
            CAST(count(*) AS BIGINT) AS cnt
@@ -1797,7 +1788,6 @@ def agg_approx_top_k_partial_algebra(
 
 @register(
     "agg_try_sum_overflow",
-    defer=True,
     oracle="""
     SELECT c_mktsegment,
            CAST(count(*) AS BIGINT) AS n_cust,

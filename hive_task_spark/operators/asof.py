@@ -305,7 +305,6 @@ def asof_join_forward_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "asof_join_nearest",
-    defer=True,
     oracle="""
     WITH pairs AS (
         SELECT p.o_orderkey, p.o_custkey,

@@ -22,6 +22,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hive_task_spark.plans.checkpoints import checkpoint_conservative
 from hive_task_spark.registry import register
 from hive_task_spark.tables import load
 
@@ -81,21 +82,16 @@ def _jaccard_pairs(spark: SparkSession, sf_dir: str, threshold: float) -> DataFr
     """Exact shingle-Jaccard pairs via explode + equi-join (no O(n²)),
     with hot shingles (df > DF_CAP) excluded from the posting-list join
     — bounding candidate count at Σ min(df, cap)² instead of Σ df²."""
-    from hive_task_spark.plans.checkpoints import checkpoint_conservative
-
     d = load(spark, sf_dir, "documents")
     # materialize-once: four consumers (sizes, df-cap, both join sides)
-    # would otherwise re-run the shingling window per reference. sh
-    # stays a PLAIN checkpoint (its consumers are aggregations and the
-    # semi-join's probe side — its understated estimate can't bait a
-    # broadcast there). r18: shk now checkpoints too — BOTH self-join
-    # sides referenced it, so the df-cap aggregation + semi-join
-    # executed twice — and CONSERVATIVELY: a plain checkpoint would
-    # inherit sh's 0.59 B/row estimate (the r7 understated class) and
-    # invite AQE to broadcast the corpus-scaled posting list into its
-    # own self-join. Measured: helper best-of-3 1.76 -> 1.53 s, same
-    # speed as the plain form, with the 100 TB-safe posture.
-    sh = _shingle_rows(d).distinct().localCheckpoint()
+    # would otherwise re-run the shingling window per reference. r18:
+    # shk checkpoints too — BOTH self-join sides referenced it, so the
+    # df-cap aggregation + semi-join executed twice. Both checkpoints
+    # are CONSERVATIVE: the shingle set's build plan advertises
+    # ~0.6 B/row (the r7 understated class), and a plain checkpoint
+    # would invite AQE to broadcast the corpus-scaled shingle and
+    # posting lists into their joins.
+    sh = checkpoint_conservative(_shingle_rows(d).distinct())
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     kept = (
         sh.groupBy("shingle")
@@ -503,19 +499,24 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Iterative min-label propagation on DataFrames: each round every
     node takes min(own label, neighbors' labels); converges in
-    O(graph diameter) rounds. localCheckpoint() per round truncates
-    the lineage (else plans grow exponentially) — the standard shape
-    for iterative algorithms on Spark without GraphX. The oracle is a
+    O(graph diameter) rounds. A checkpoint per round truncates the
+    lineage (else plans grow exponentially) — the standard shape for
+    iterative algorithms on Spark without GraphX. The edge list and
+    each round's labels checkpoint CONSERVATIVELY: both scale with the
+    corpus, and a plain checkpoint would carry the round join's
+    multiplied estimate (measured up to 4.5e75 B/row). The oracle is a
     recursive-CTE transitive closure. At 100 TB use the large-star/
     small-star variant (fewer rounds on skewed degree distributions);
     the per-round dataflow is identical."""
     pairs = _jaccard_pairs(spark, sf_dir, 0.5).select("doc_a", "doc_b")
     d = load(spark, sf_dir, "documents").select("doc_id")
-    edges = pairs.unionByName(
-        pairs.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
+    edges = checkpoint_conservative(
+        pairs.unionByName(
+            pairs.select(
+                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
+            )
         )
-    ).localCheckpoint()
+    )
     labels = d.select("doc_id", F.col("doc_id").alias("component")).localCheckpoint()
     for _ in range(20):  # >= graph diameter on any plausible corpus
         neigh = (
@@ -523,16 +524,14 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("doc_a").alias("doc_id"))
             .agg(F.min("component").alias("neigh_min"))
         )
-        new_labels = (
-            labels.join(neigh, "doc_id", "left")
-            .select(
+        new_labels = checkpoint_conservative(
+            labels.join(neigh, "doc_id", "left").select(
                 "doc_id",
                 F.least(
                     F.col("component"),
                     F.coalesce(F.col("neigh_min"), F.col("component")),
                 ).alias("component"),
             )
-            .localCheckpoint()
         )
         changed = (
             new_labels.alias("n")
@@ -790,12 +789,14 @@ def dedup_minhash_portable_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coalesces the tiny shingle exchange to ~1 partition, which would
     # serialize the 4.2M portable md5 evaluations below (seeds x
     # shingles). Round-robin placement is value-neutral here: min() is
-    # order-independent and band signatures sort explicitly.
-    sh = (
+    # order-independent and band signatures sort explicitly. The
+    # checkpoint is conservative: the shingle set's build plan
+    # advertises ~0.6 B/row (the r7 understated class), and shingles
+    # scale with the corpus.
+    sh = checkpoint_conservative(
         _shingle_rows(d)
         .distinct()
         .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint()
     )
     seeds = F.broadcast(
         spark.range(0, 16).select(F.col("id").cast("int").alias("seed"))
@@ -921,7 +922,9 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; per-ingest cost is |batch| signatures + one band-key
     equi-join against the index."""
     d = load(spark, sf_dir, "documents")
-    sh = _shingle_rows(d).distinct().localCheckpoint()
+    # conservative: the shingle set's build plan advertises ~0.6 B/row
+    # (the r7 understated class), and shingles scale with the corpus
+    sh = checkpoint_conservative(_shingle_rows(d).distinct())
     cut = d.agg(F.floor(F.max("doc_id") * 0.8).cast("long").alias("c"))
     seeds = F.broadcast(
         spark.range(0, 16).select(F.col("id").cast("int").alias("seed"))
@@ -1060,8 +1063,6 @@ def dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs approximation argument."""
     from hive_task_spark.operators.text import _winnow_rows
 
-    from hive_task_spark.plans.checkpoints import checkpoint_conservative
-
     d = load(spark, sf_dir, "documents")
     # r17: checkpoint the winnowed rows — both the fingerprint posting
     # list and the verification shingle sets read them, and without the
@@ -1072,7 +1073,7 @@ def dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min/collect_set-then-sort or exact set ops).
     # r18 (ADVICE r17 #4): conservative checkpoint — the plain form
     # advertised 0.96 B/row (26939 rows, 25969 B — the r7 understated
-    # class, caught by the extended CHECKPOINT_AUDITED guard).
+    # class, caught by the checkpoint-stats guard).
     # Winnowed rows scale with the corpus, so no-broadcast is the only
     # plan that survives 100 TB.
     rows = checkpoint_conservative(

@@ -281,7 +281,6 @@ def sort_nulls_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "merge_upsert_apply",
-    defer=True,
     oracle="""
     WITH upd AS (
         SELECT o_orderkey, round(o_totalprice * 1.1, 3) AS new_price
@@ -354,7 +353,6 @@ def merge_upsert_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "merge_mirror_sync_apply",
-    defer=True,
     oracle="""
     WITH src AS (
         SELECT c_custkey, c_nationkey,
@@ -524,7 +522,6 @@ def relational_transpose(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "relational_pandas_api_pipeline",
-    defer=True,
     oracle="""
     SELECT n.n_name                              AS nation,
            CAST(count(*) AS BIGINT)              AS customers,

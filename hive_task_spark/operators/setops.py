@@ -116,7 +116,6 @@ def setop_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "setop_union_schema_evolution",
-    defer=True,
     oracle="""
     SELECT n_nationkey AS entity_key, n_name AS entity_name,
            CAST(n_regionkey AS BIGINT) AS region_key,

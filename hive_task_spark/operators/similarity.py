@@ -1220,7 +1220,7 @@ def _pq_oracle() -> str:
     """
 
 
-@register("similarity_product_quantization", oracle=_pq_oracle(), defer=True)
+@register("similarity_product_quantization", oracle=_pq_oracle())
 def similarity_product_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization (PQ, the faiss IVF-PQ compression stage):
     each 64-dim vector splits into 4 x 16-dim subspaces, each subspace
@@ -1332,7 +1332,6 @@ _RRF_QVEC_SPARK = "array(" + ",".join(f"{x}D" for x in _IVF_CODEBOOK[0]) + ")"
     FROM lr JOIN sr ON lr.doc_id = sr.doc_id
     WHERE lr.r_lex <= 50 OR sr.r_sem <= 50
     """,
-    defer=True,
 )
 def similarity_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval via reciprocal-rank fusion (k=60): the
@@ -1451,7 +1450,7 @@ def _mmr_oracle() -> str:
     """
 
 
-@register("similarity_mmr_rerank", oracle=_mmr_oracle(), defer=True)
+@register("similarity_mmr_rerank", oracle=_mmr_oracle())
 def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein):
     from the top-12 cosine candidates for query vec 0, greedily pick
@@ -1576,7 +1575,6 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     WHERE vr = 1
     """,
-    defer=True,
 )
 def similarity_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-nearest-neighbor classification (k=5, cosine metric, majority
@@ -1649,7 +1647,7 @@ def _recall_oracle() -> str:
     """
 
 
-@register("similarity_recall_report", oracle=_recall_oracle(), defer=True)
+@register("similarity_recall_report", oracle=_recall_oracle())
 def similarity_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality evaluation AS A QUERY: per-query recall@5 of the
     sign-LSH index against the brute-force ground truth — the eval
@@ -1683,7 +1681,6 @@ def similarity_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "similarity_rec_diversity_eval",
-    defer=True,
     oracle=f"""
     WITH rec AS ({_ORACLE_TOPK}),
     v AS (
@@ -1795,7 +1792,6 @@ def similarity_rec_diversity_eval(
 
 @register(
     "similarity_filtered_search",
-    defer=True,
     oracle=f"""
     WITH v AS (
         SELECT vec_id, label,
@@ -1889,7 +1885,6 @@ def similarity_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "similarity_hard_negative_mining",
-    defer=True,
     oracle=f"""
     WITH v AS (
         SELECT vec_id, label,
@@ -1980,7 +1975,6 @@ def similarity_hard_negative_mining(
 
 @register(
     "similarity_negative_sampling",
-    defer=True,
     oracle=f"""
     WITH corpus AS (
         SELECT vec_id, label FROM embeddings
@@ -2045,7 +2039,6 @@ def similarity_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "similarity_centroid_drift",
-    defer=True,
     oracle="""
     WITH e AS (
         SELECT label,
@@ -3114,7 +3107,7 @@ _ORACLE_HAMMING_TOPK = f"""
 """
 
 
-@register("similarity_binary_hamming_topk", oracle=_ORACLE_HAMMING_TOPK, defer=True)
+@register("similarity_binary_hamming_topk", oracle=_ORACLE_HAMMING_TOPK)
 def similarity_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-embedding search: sign-binarize each vector (bit i = dim
     i > 0), pack 32 bits per BIGINT word, and rank candidates per
@@ -3225,7 +3218,7 @@ _ORACLE_RNN_PAIRS = f"""
 """
 
 
-@register("similarity_reciprocal_nn_pairs", oracle=_ORACLE_RNN_PAIRS, defer=True)
+@register("similarity_reciprocal_nn_pairs", oracle=_ORACLE_RNN_PAIRS)
 def similarity_reciprocal_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal nearest-neighbor pairs WITHIN frozen-IVF cells:
     assign every unit vector to its argmax-cosine centroid (the
@@ -3365,7 +3358,7 @@ _ORACLE_KMEANSPP = f"""
 """.replace("{cb}", _CODEBOOK_SQL)
 
 
-@register("similarity_kmeanspp_next_centroid", oracle=_ORACLE_KMEANSPP, defer=True)
+@register("similarity_kmeanspp_next_centroid", oracle=_ORACLE_KMEANSPP)
 def similarity_kmeanspp_next_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Furthest-first traversal step (deterministic k-means++ / k-center
     seeding, Gonzalez 1985): given the frozen codebook, rank corpus

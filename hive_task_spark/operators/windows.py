@@ -275,7 +275,6 @@ def window_nth_first_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "window_running_distinct",
-    defer=True,
     oracle="""
     WITH flagged AS (
         SELECT event_id, user_id, ts,
@@ -323,7 +322,6 @@ def window_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "window_time_range_frame",
-    defer=True,
     oracle="""
     SELECT o_orderkey, o_custkey,
            CAST(count(*) OVER w AS BIGINT)      AS n_7d,
@@ -357,7 +355,6 @@ def window_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "window_rolling_features",
-    defer=True,
     oracle="""
     SELECT event_id, user_id,
            CAST(row_number() OVER w AS BIGINT)             AS event_idx,
@@ -443,7 +440,6 @@ def window_rolling_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s
     WHERE n >= 2
     """,
-    defer=True,
 )
 def window_rolling_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling OLS trend (slope + intercept over the trailing 5 orders
@@ -510,7 +506,6 @@ def window_rolling_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
                  6) AS med5_r
     FROM daily
     """,
-    defer=True,
 )
 def window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling exact median (5-observation frame) over each user's
@@ -554,7 +549,6 @@ def window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS corr7_r
     FROM daily
     """,
-    defer=True,
 )
 def window_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day Pearson correlation between the click and view

@@ -20,10 +20,6 @@ from hive_task_spark.functions import exact
 from hive_task_spark.registry import register
 from hive_task_spark.tables import load
 
-def _revenue():
-    # built lazily — Column arithmetic needs an active SparkContext
-    return (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev")
-
 
 def _revenue_u4():
     """Revenue in exact BIGINT 1e-4 units (2dp price × 2dp discount —
@@ -1314,7 +1310,6 @@ def cbo_stats_table_name() -> str:
 
 @register(
     "sql_analyze_cbo_stats",
-    defer=True,
     oracle="""
     WITH t AS (
         SELECT nullif(o_custkey % 97, 0) AS bucket97,

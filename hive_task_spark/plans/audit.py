@@ -115,34 +115,12 @@ AUDITED = [
     "source_commit_log_data_skipping",
     "source_commit_log_vacuum",
     "stream_statestore_join_state_reader",
-]
-
-# Queries whose shared subtrees materialize via localCheckpoint: their
-# build stages execute eagerly at plan-construction time, so the
-# final-plan table above cannot see them. For these, the audit also
-# records every checkpointed intermediate: actual rows, the
-# post-checkpoint plan-size estimate downstream AQE joins will see,
-# bytes/row, and the pre-checkpoint build-plan summary — closing the
-# r7 blind spot (an understated checkpoint estimate flipped AQE joins
-# to broadcasting a 1.2M-row edge list; see plans/checkpoints.py).
-# tests/test_plans.py enforces the stats invariants over this list.
-CHECKPOINT_AUDITED = [
-    "dedup_minhash_lsh",
+    # checkpointing queries whose build segments PLANS.md reports
     "analytics_triangle_count",
-    "analytics_kcore",
-    "similarity_kmeans_assign",
-    "analytics_louvain_one_level",
-    # r17: winnowing's plain localCheckpoint was the one path still
-    # exposed to the r7 understatement class; the other three use
-    # conservative checkpoints.
-    "dedup_winnowing_pairs",
     "analytics_pagerank_lite",
-    "analytics_graph_modularity",
     "sql_recursive_cte",
-    # r18 vector cohort: the Arrow kernels' checkpointed outputs.
     "similarity_ann_lsh",
     "similarity_ann_ivf",
-    "similarity_reciprocal_nn_pairs",
 ]
 
 
@@ -163,6 +141,10 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
     from pyspark.sql import SparkSession
 
     from hive_task_spark import registry
+    from hive_task_spark.plans.checkpoints import (
+        record_checkpoints,
+        understated_records,
+    )
 
     registry.load_all()
     spark = (
@@ -189,8 +171,10 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
         "|---|---|---|---|---|---|---|",
     ]
     details: list[str] = []
+    ckpt_rows: list[str] = []
     for name in AUDITED:
-        df = registry.QUERIES[name](spark, sf_dir)
+        with record_checkpoints() as recs:
+            df = registry.QUERIES[name](spark, sf_dir)
         df.collect()  # executes THIS plan, so AQE finalizes it in place
         plan = df._jdf.queryExecution().executedPlan().toString()
         plan = plan.split("== Initial Plan ==")[0]  # drop pre-AQE copy
@@ -204,13 +188,23 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
             pushed = "; ".join(p[:100] for p in s["pushed"] if p.strip())
             if pushed:
                 details.append(f"- **{name}** PushedFilters: `{pushed}`")
+        for i, rec in enumerate(recs):
+            b = rec.build_summary()
+            stats = rec.stats_bytes
+            human = (
+                f"{stats / (1 << 30):.1f} GiB" if stats >= (1 << 30)
+                else f"{stats / (1 << 20):.2f} MiB" if stats >= (1 << 20)
+                else f"{stats} B"
+            )
+            bpr = f"{stats / rec.rows:.1f}" if rec.rows else "—"
+            ckpt_rows.append(
+                f"| {name} | #{i} | {rec.rows} | {human} | {bpr} | "
+                f"{b['exchanges']} | {b['joins']} | {b['aggregates']} |"
+            )
+        bad = understated_records(recs, min_rows=1000)
+        if bad:
+            ckpt_rows.append(f"| {name} | — | — | **UNDERSTATED: {bad}** | | | | |")
     lines += ["", "## Scan pushdown evidence", ""] + (details or ["(none)"])
-
-    from hive_task_spark.plans.checkpoints import (
-        record_checkpoints,
-        understated_records,
-    )
-
     lines += [
         "",
         "## Checkpointed intermediates (eager build segments)",
@@ -227,33 +221,18 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
         "kcore/louvain round checkpoints, which inherit multiplied",
         "iterative-join estimates) are bounded by the mirror invariant",
         "(overstated_records, <= 1e6 B/row) with documented waivers",
-        "(test_plans.py _OVERSTATED_WAIVED): each inflated relation is",
-        "corpus-scaled, so the no-broadcast default the inflation forces",
-        "is the 100 TB-correct plan, and every broadcast those queries",
-        "need is an explicit F.broadcast/hint immune to the estimate.",
+        "(test_plans.py _OVERSTATED_WAIVED): every broadcast downstream",
+        "of a waived checkpoint is an explicit F.broadcast/hint immune to",
+        "the estimate, and any join left to AQE is corpus-scaled. Rows of",
+        "checkpoint_conservative (Long.MaxValue stats by design) are",
+        "exempt from that bound. The test applies both invariants to",
+        "every query whose build checkpoints; this table lists the",
+        "audited ones.",
         "",
         "| query | ckpt | rows | stats | B/row | build exchanges | build joins | build aggs |",
         "|---|---|---|---|---|---|---|---|",
     ]
-    for name in CHECKPOINT_AUDITED:
-        with record_checkpoints() as recs:
-            registry.QUERIES[name](spark, sf_dir)
-        for i, rec in enumerate(recs):
-            b = rec.build_summary()
-            stats = rec.stats_bytes
-            human = (
-                f"{stats / (1 << 30):.1f} GiB" if stats >= (1 << 30)
-                else f"{stats / (1 << 20):.2f} MiB" if stats >= (1 << 20)
-                else f"{stats} B"
-            )
-            bpr = f"{stats / rec.rows:.1f}" if rec.rows else "—"
-            lines.append(
-                f"| {name} | #{i} | {rec.rows} | {human} | {bpr} | "
-                f"{b['exchanges']} | {b['joins']} | {b['aggregates']} |"
-            )
-        bad = understated_records(recs, min_rows=1000)
-        if bad:
-            lines.append(f"| {name} | — | — | **UNDERSTATED: {bad}** | | | | |")
+    lines += ckpt_rows
     lines.append("")
     with open("PLANS.md", "w") as fh:
         fh.write("\n".join(lines))

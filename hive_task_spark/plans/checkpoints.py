@@ -13,10 +13,12 @@ This module intercepts ``DataFrame.localCheckpoint`` for the duration
 of a ``with record_checkpoints() as recs:`` block and records, per
 checkpoint: the materialized DataFrame, its actual row count, the
 post-checkpoint logical-plan size estimate (what AQE's join planning
-will see downstream), and a summary of the pre-checkpoint build plan.
-``plans.audit`` uses it to publish build-segment evidence in PLANS.md;
-``tests/test_plans.py`` uses it to enforce the class-wide invariant:
-no checkpointed intermediate may advertise broadcast-bait stats
+will see downstream), a summary of the pre-checkpoint build plan, and
+whether ``checkpoint_conservative`` made it. ``plans.audit`` uses it to
+publish build-segment evidence in PLANS.md; ``tests/test_plans.py``
+builds every registered batch query once under it and enforces the
+class-wide invariant on every checkpoint that walk records: no
+checkpointed intermediate may advertise broadcast-bait stats
 (< _MIN_BYTES_PER_ROW per actual row) once it has real volume.
 """
 
@@ -43,6 +45,7 @@ _MIN_BYTES_PER_ROW = 8
 class CheckpointRecord:
     source_plan: str  # pre-checkpoint optimized plan (build segment)
     checkpointed: object  # the materialized DataFrame
+    conservative: bool = False  # made by checkpoint_conservative
 
     _rows: int | None = None
     _stats: int | None = None
@@ -119,7 +122,9 @@ def checkpoint_conservative(df):
     )
     out = _DF(new_jdf, spark)
     if _ACTIVE_RECORDS is not None:
-        _ACTIVE_RECORDS.append(CheckpointRecord(source_plan=src, checkpointed=out))
+        _ACTIVE_RECORDS.append(
+            CheckpointRecord(source_plan=src, checkpointed=out, conservative=True)
+        )
     return out
 
 
@@ -184,19 +189,22 @@ def overstated_records(records: list[CheckpointRecord]) -> list[str]:
     actual row), which would stop AQE from broadcasting a genuinely
     small relation downstream. Returns human-readable violations.
 
-    Waivers (tests/test_plans.py _OVERSTATED_WAIVED) are allowed when
-    the intermediate's true size scales with the corpus (nodes,
-    candidate pairs, surviving edges), so the conservative
-    no-broadcast default the inflation forces is the 100 TB-correct
-    plan anyway — and any broadcast the query DOES need is written as
-    an explicit ``F.broadcast``/hint, immune to the estimate.
-    Iterative BSP loops (kcore, louvain) inherit multiplied join
-    estimates through each round's checkpoint by construction; there
-    is no public stats-injection API to correct them.
+    ``checkpoint_conservative`` records are skipped: their Long.MaxValue
+    estimate is that helper's documented purpose. Waivers
+    (tests/test_plans.py _OVERSTATED_WAIVED) are allowed when the
+    inflated estimate decides no join: every broadcast the query needs
+    downstream is written as an explicit ``F.broadcast``/hint, immune to
+    the estimate, and any join left to AQE is between relations whose
+    true size scales with the corpus (nodes, candidate pairs, surviving
+    edges), where the no-broadcast default the inflation forces is the
+    100 TB-correct plan anyway. Iterative BSP loops
+    (kcore, louvain) inherit multiplied join estimates through each
+    round's checkpoint by construction; there is no public
+    stats-injection API to correct them.
     """
     bad = []
     for i, rec in enumerate(records):
-        if rec.rows == 0:
+        if rec.conservative or rec.rows == 0:
             continue
         if rec.stats_bytes > rec.rows * _MAX_BYTES_PER_ROW:
             bad.append(

@@ -24,6 +24,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The directory that holds the hive_task_spark package. Module-level
+# Python kernels (mapInArrow / applyInPandas functions) are pickled by
+# reference, so every Python worker must be able to import the package
+# whatever the driver's working directory is.
+_PACKAGE_ROOT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
+
 
 def default_parallelism() -> int:
     """Worker sizing — the analog of the reference's CPU-count probe
@@ -62,6 +70,7 @@ def get_session(
         # sets spark.scheduler.pool) actually shares the cluster across
         # concurrent submissions; under default FIFO the tag is inert.
         .config("spark.scheduler.mode", "FAIR")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -102,20 +111,4 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             pass  # static conf on some builds — keep going
-    # Scale knob, OFF by default (r18): the bench SFs put every base
-    # table in ONE parquet split (maxPartitionBytes default 128 MB ≫
-    # file size), so scans never parallelize locally — at 100 TB the
-    # same default yields full parallelism, i.e. the local bench was
-    # structurally serial at the scan. With every money edge now an
-    # exact integer sum (order-independent), a smaller split size is
-    # value-neutral; it stays an explicit env opt-in so the driver's
-    # default bench remains comparable round-over-round (the r18
-    # scaling demonstration sets it; see OPTIMIZATION_r18.md).
-    split = os.environ.get("SPARK_GRAFT_MAX_SPLIT_BYTES", "")
-    if split:
-        try:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", split)
-            spark.conf.set("spark.sql.files.openCostInBytes", "65536")
-        except Exception:
-            pass
     return spark

@@ -39,13 +39,6 @@ ORACLES: dict[str, str] = {}
 # AUDIT_WINDOW first, not the order operators were registered in.
 REGISTRATION_ORDER: list[str] = []
 
-# Late additions to modules inside the audit window register with
-# defer=True: they queue here and flush AFTER every module has
-# registered, so the curated first-50 window (see load_all) is a
-# stable function of the rotation plan, not of which file a new
-# operator happens to live in.
-_DEFERRED: list[tuple[str, QueryFn, str | None]] = []
-
 # The external audit samples the FIRST 50 queries in registration
 # order.  Rather than deriving that window from module import order
 # (fragile — adding one operator to an early module silently evicts
@@ -115,22 +108,10 @@ AUDIT_WINDOW: tuple[str, ...] = (
 )
 
 
-def register(
-    name: str, oracle: str | None = None, defer: bool = False
-) -> Callable[[QueryFn], QueryFn]:
-    """Register a named query and (optionally) its DuckDB oracle SQL.
-
-    defer=True postpones the registration to the end of load_all —
-    REQUIRED for new operators added to modules that feed the first-50
-    audit window (relational/windows/setops/asof/sources/streaming/
-    similarity in round 3), so they don't silently displace the
-    families the current rotation promised driver signal to.
-    """
+def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+    """Register a named query and (optionally) its DuckDB oracle SQL."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        if defer:
-            _DEFERRED.append((name, fn, oracle))
-            return fn
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
         QUERIES[name] = fn
@@ -140,17 +121,6 @@ def register(
         return fn
 
     return deco
-
-
-def _flush_deferred() -> None:
-    while _DEFERRED:
-        name, fn, oracle = _DEFERRED.pop(0)
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        REGISTRATION_ORDER.append(name)
-        if oracle is not None:
-            ORACLES[name] = oracle
 
 
 def _apply_window() -> None:
@@ -214,5 +184,4 @@ def load_all() -> None:
         udfs,
     )
 
-    _flush_deferred()
     _apply_window()

@@ -303,7 +303,6 @@ def source_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_join_dpp_prune",
-    defer=True,
     oracle="""
     SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
            CAST(count(*) AS BIGINT)          AS n_orders,
@@ -396,7 +395,6 @@ class _FibReader(DataSourceReader):
 
 @register(
     "source_python_datasource",
-    defer=True,
     oracle="""
     WITH RECURSIVE fib(n, a, b) AS (
         SELECT 0, CAST(0 AS BIGINT), CAST(1 AS BIGINT)
@@ -505,7 +503,6 @@ class _PushdownRangeReader(DataSourceReader):
 
 @register(
     "source_python_datasource_pushdown",
-    defer=True,
     oracle="""
     SELECT CAST(i // 64 AS BIGINT)      AS part,
            CAST(i AS BIGINT)            AS i,
@@ -544,7 +541,6 @@ def source_python_datasource_pushdown(
 
 @register(
     "source_ignore_corrupt_files",
-    defer=True,
     oracle="""
     SELECT n_nationkey, n_name, n_regionkey FROM nation
     """,
@@ -574,7 +570,6 @@ def source_ignore_corrupt_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_xml_roundtrip",
-    defer=True,
     oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation",
 )
 def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -607,7 +602,6 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_parquet_zstd",
-    defer=True,
     oracle="""
     SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
            round(sum(l_extendedprice), 2) AS total_r
@@ -637,7 +631,6 @@ def source_parquet_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_compact_small_files",
-    defer=True,
     oracle="""
     SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
            round(sum(o_totalprice), 2) AS total_r
@@ -680,7 +673,6 @@ def source_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     WHERE doc_id <= 20
     """,
-    defer=True,
 )
 def source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`binaryFile` source — the blob-ingestion path every multimodal
@@ -737,7 +729,6 @@ def source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o_orderstatus <> 'F' OR year(o_orderdate) >= 1997
     GROUP BY o_orderstatus
     """,
-    defer=True,
 )
 def source_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition overwrite (`partitionOverwriteMode=dynamic`):
@@ -800,7 +791,6 @@ def source_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> Data
         round(sum(c_acctbal), 2)               AS total_bal_r
     FROM u
     """,
-    defer=True,
 )
 def source_parquet_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema evolution on read: two parquet drops with DIFFERENT
@@ -842,7 +832,6 @@ def source_parquet_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(2 AS BIGINT) AS n_copies
     FROM nation
     """,
-    defer=True,
 )
 def source_write_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DataFrameWriter save-mode semantics: `overwrite` resets the
@@ -925,7 +914,6 @@ def _read_snapshot(spark: SparkSession, base: str, version: int) -> DataFrame:
            CAST(max(n_nationkey) AS BIGINT) AS max_key
     FROM nation WHERE n_nationkey < 10 OR n_nationkey >= 20
     """,
-    defer=True,
 )
 def source_commit_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lakehouse transaction-log replay, latest snapshot: immutable
@@ -953,7 +941,6 @@ def source_commit_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
                       WHERE n_nationkey < 10 OR n_nationkey >= 20)))
          AS t(v, n)
     """,
-    defer=True,
 )
 def source_commit_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time travel over the commit log: the same dataset read AS OF
@@ -1089,7 +1076,6 @@ def occ_commit(base: str, read_version: int, actions: list[dict]) -> tuple[int, 
         (4, 3, (SELECT count(*) FROM nation)))
         AS t(v, f, n)
     """,
-    defer=True,
 )
 def source_commit_log_optimistic_concurrency(
     spark: SparkSession, sf_dir: str
@@ -1207,7 +1193,6 @@ def source_commit_log_optimistic_concurrency(
            CAST(sum(n_nationkey) AS BIGINT) AS key_sum
     FROM nation
     """,
-    defer=True,
 )
 def source_csv_dropmalformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV DROPMALFORMED mode: a shard of hand-corrupted lines (wrong
@@ -1277,7 +1262,6 @@ def source_csv_dropmalformed(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS prune_frac_r
     FROM zones GROUP BY layout
     """,
-    defer=True,
 )
 def source_zone_map_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zone-map (min/max statistics) skipping report — WHY you sort
@@ -1501,7 +1485,6 @@ def _rowgroup_stats_batches(it):
            CAST(max_v AS BIGINT)    AS max_v
     FROM stats
     """,
-    defer=True,
 )
 def source_parquet_rowgroup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-group statistics manifest: write a doc_id-sorted shard with
@@ -1538,7 +1521,6 @@ def source_parquet_rowgroup_stats(spark: SparkSession, sf_dir: str) -> DataFrame
            concat(n_name, ' | region ', CAST(n_regionkey AS VARCHAR)) AS label
     FROM nation
     """,
-    defer=True,
 )
 def source_csv_multichar_delimiter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-character CSV delimiter roundtrip (Spark 3.x+ `sep` may be
@@ -1588,7 +1570,6 @@ def source_csv_multichar_delimiter(spark: SparkSession, sf_dir: str) -> DataFram
     FROM nation
     ORDER BY n_nationkey
     """,
-    defer=True,
 )
 def source_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-line JSON reader (`multiLine=true`): one pretty-printed
@@ -1640,7 +1621,6 @@ def source_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM nation
     ORDER BY n_nationkey
     """,
-    defer=True,
 )
 def source_csv_comment_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV dialect gauntlet: a file with interleaved '#' comment lines
@@ -1861,7 +1841,6 @@ class _JsonLinesWriter(DataSourceWriter):
 
 @register(
     "source_python_datasource_writer",
-    defer=True,
     oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation",
 )
 def source_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1951,7 +1930,6 @@ class _ArrowParquetWriter(DataSourceArrowWriter, _JsonLinesWriter):
 
 @register(
     "source_python_datasource_arrow_writer",
-    defer=True,
     oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation",
 )
 def source_python_datasource_arrow_writer(
@@ -1994,7 +1972,6 @@ def source_python_datasource_arrow_writer(
 
 @register(
     "source_file_metadata_columns",
-    defer=True,
     oracle="""
     SELECT o_orderpriority,
            CAST(1 AS BIGINT)            AS n_files,
@@ -2164,7 +2141,6 @@ def stats_prune(
                 AS DOUBLE) / 100.0 AS sum_price_r
     FROM orders WHERE o_totalprice >= 160000
     """,
-    defer=True,
 )
 def source_commit_log_data_skipping(
     spark: SparkSession, sf_dir: str
@@ -2295,7 +2271,6 @@ def occ_vacuum(base: str, retain_from: int) -> list[str]:
         (2, 2, 2, (SELECT count(*) FROM nation)))
         AS t(p, d, r, n)
     """,
-    defer=True,
 )
 def source_commit_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retention VACUUM / orphan GC over the commit-log table — the

@@ -466,7 +466,6 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_zscore_static",
-    defer=True,
     oracle="""
     WITH stats AS (
         SELECT event_type, avg(value) AS mu, stddev_samp(value) AS sigma
@@ -511,7 +510,6 @@ def stream_zscore_static(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_multibatch_agg",
-    defer=True,
     oracle="""
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS n_events,
@@ -549,7 +547,6 @@ def stream_multibatch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_late_drop_proof",
-    defer=True,
     oracle="""
     WITH kept AS (
         SELECT * FROM events WHERE ts >= TIMESTAMP '2024-01-20 00:00:00'
@@ -623,7 +620,6 @@ def stream_late_drop_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_file_sink_roundtrip",
-    defer=True,
     oracle="""
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS n_events,
@@ -678,7 +674,6 @@ def stream_file_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY user_id
     """,
-    defer=True,
 )
 def stream_statestore_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """State-store READER (Spark 4 `spark.read.format("statestore")`):
@@ -742,7 +737,6 @@ def stream_statestore_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING day_start_s + 86400
            <= (SELECT epoch(max(ts) - INTERVAL 1 HOUR) FROM events)
     """,
-    defer=True,
 )
 def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CHAINED stateful aggregations in one streaming query (Spark 4
@@ -807,7 +801,6 @@ def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE NOT EXISTS (SELECT 1 FROM matched m WHERE m.view_id = v.view_id)
       AND v.ts + INTERVAL 10 MINUTE < wm.w
     """,
-    defer=True,
 )
 def stream_outer_join_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER join with watermark-driven null
@@ -875,7 +868,6 @@ def stream_outer_join_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stream_dedup_within_watermark",
     oracle="SELECT DISTINCT event_id FROM events",
-    defer=True,
 )
 def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicatesWithinWatermark (Spark 3.5+): dedups keys whose
@@ -900,7 +892,6 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "stream_upsert_sink",
-    defer=True,
     oracle="""
     SELECT user_id, last_ts_us, last_value_r, n_changes
     FROM (
@@ -1006,7 +997,6 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_lambda_backfill_union",
-    defer=True,
     oracle="""
     WITH cut AS (
         SELECT min(CAST(floor(epoch(ts) / 86400) AS BIGINT)) + 20 AS c
@@ -1274,7 +1264,6 @@ def stream_session_window_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataF
 
 @register(
     "stream_update_mode_progression",
-    defer=True,
     oracle="""
     SELECT event_type,
            CAST(count(*) AS BIGINT)  AS n_events,
@@ -1400,7 +1389,6 @@ class _TickStreamReader(DataSourceStreamReader):
     FROM range(1000) t(i)
     GROUP BY i % 8
     """,
-    defer=True,
 )
 def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over a custom Python streaming DataSource (Spark 4
@@ -1609,7 +1597,6 @@ class _JsonLinesStreamWriter(DataSourceStreamWriter):
 
 @register(
     "stream_python_datasource_sink",
-    defer=True,
     oracle="""
     SELECT CAST(i % 8 AS BIGINT)              AS bucket,
            CAST(count(*) AS BIGINT)           AS n,
@@ -1805,7 +1792,6 @@ def _ttl_evict_per_user(key, pdf_iter, state):
 
 @register(
     "stream_state_ttl_eviction",
-    defer=True,
     oracle="""
     WITH g AS (SELECT max(epoch_ms(ts)) AS gmax FROM events),
     u AS (SELECT user_id,
@@ -1936,7 +1922,6 @@ def eo_state_table_name() -> str:
 
 @register(
     "stream_foreachbatch_exactly_once",
-    defer=True,
     oracle="""
     SELECT user_id,
            CAST(count(*) AS BIGINT) AS n_events,
@@ -2223,7 +2208,6 @@ def _run_cohort_batches(
     FROM events
     GROUP BY user_id
     """,
-    defer=True,
 )
 def stream_rocksdb_changelog_checkpoint(
     spark: SparkSession, sf_dir: str
@@ -2309,7 +2293,6 @@ def stream_rocksdb_changelog_checkpoint(
     WHERE user_id % 3 <= b
     GROUP BY b
     """,
-    defer=True,
 )
 def stream_statestore_time_travel(
     spark: SparkSession, sf_dir: str
@@ -2402,7 +2385,6 @@ def stream_statestore_time_travel(
         FROM events WHERE event_type = 'purchase'
     ) t
     """,
-    defer=True,
 )
 def stream_statestore_join_state_reader(
     spark: SparkSession, sf_dir: str

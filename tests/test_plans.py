@@ -6,20 +6,28 @@ aggregation is partial+final, no accidental cartesian products.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 import pytest
 
 from hive_task_spark import registry
-from hive_task_spark.plans.audit import CHECKPOINT_AUDITED
+from hive_task_spark.plans.checkpoints import (
+    overstated_records,
+    record_checkpoints,
+    understated_records,
+)
 
 registry.load_all()
 
 
-def _plan(spark, sf_dir, name: str) -> str:
-    df = registry.QUERIES[name](spark, sf_dir)
-    je = df._jdf.queryExecution()
-    return je.explainString(
+def _explain(spark, df) -> str:
+    return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+
+
+def _plan(spark, sf_dir, name: str) -> str:
+    return _explain(spark, registry.QUERIES[name](spark, sf_dir))
 
 
 def _broadcast_threshold_bytes(spark) -> int:
@@ -38,6 +46,88 @@ def _broadcast_threshold_bytes(spark) -> int:
     if raw.endswith("b"):
         return int(float(raw[:-1]))
     return int(float(raw))
+
+
+# An unpartitioned Window funnels its whole input through one task, so
+# it is only allowed above a node that bounds the row count.
+_BOUNDING_NODES = {
+    "Aggregate",
+    "LocalRelation",
+    "OneRowRelation",
+    "GlobalLimit",
+    "Deduplicate",
+}
+
+
+def _is_bounded(node) -> bool:
+    """True iff EVERY path from this node down to a relation scan
+    passes through a bounding node — 'an Aggregate exists somewhere
+    in the subtree' is not enough (a raw fact table cross-joined
+    with a broadcast 1-row aggregate contains an Aggregate yet
+    keeps the fact table's cardinality; ADVICE r4)."""
+    if node.nodeName() in _BOUNDING_NODES:
+        return True
+    ch = node.children()
+    if ch.size() == 0:
+        return False  # leaf relation scan: unbounded by definition
+    return all(_is_bounded(ch.apply(i)) for i in range(ch.size()))
+
+
+def _has_unbounded_global_window(plan) -> bool:
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        ch = node.children()
+        if node.nodeName() == "Window" and node.partitionSpec().isEmpty():
+            if not all(_is_bounded(ch.apply(i)) for i in range(ch.size())):
+                return True
+        stack.extend(ch.apply(i) for i in range(ch.size()))
+    return False
+
+
+@dataclass
+class _Verdict:
+    """What the registry walk keeps of one query: verdicts, never the
+    DataFrame (or the checkpointed partitions it pins)."""
+
+    cartesian: bool
+    unbounded_window: bool
+    checkpoints: int
+    understated: list[str]
+    overstated: list[str]
+    below_threshold: list[str]
+
+
+@pytest.fixture(scope="module")
+def registry_walk(spark, sf_dir) -> dict[str, _Verdict]:
+    """Build every registered batch query ONCE, recording its
+    checkpoints, and keep the verdicts the registry-wide plan tests
+    assert on. Streaming plans materialize lazily and sources write,
+    so ``stream_``/``source_`` queries are not walked."""
+    threshold = _broadcast_threshold_bytes(spark)
+    verdicts = {}
+    for name in sorted(registry.QUERIES):
+        if name.startswith(("stream_", "source_")):
+            continue
+        with record_checkpoints() as recs:
+            df = registry.QUERIES[name](spark, sf_dir)
+        verdicts[name] = _Verdict(
+            cartesian="CartesianProduct" in _explain(spark, df),
+            unbounded_window=_has_unbounded_global_window(
+                df._jdf.queryExecution().optimizedPlan()
+            ),
+            checkpoints=len(recs),
+            understated=understated_records(recs, min_rows=1000),
+            overstated=overstated_records(recs),
+            below_threshold=[
+                f"checkpoint #{i}: {rec.rows} rows but stats "
+                f"{rec.stats_bytes}B <= autoBroadcastJoinThreshold "
+                f"{threshold}B — AQE would broadcast it"
+                for i, rec in enumerate(recs)
+                if rec.rows > 100_000 and rec.stats_bytes <= threshold
+            ],
+        )
+    return verdicts
 
 
 def test_star_join_all_broadcast(spark, sf_dir):
@@ -79,14 +169,11 @@ def test_global_topk_avoids_global_sort(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_no_cartesian_products_anywhere(spark, sf_dir):
+def test_no_cartesian_products_anywhere(registry_walk):
     """Nothing in the inventory may plan a CartesianProduct; the only
     intentional cross join (join_cross_small) must broadcast."""
-    for name in sorted(registry.QUERIES):
-        if name.startswith("stream_") or name.startswith("source_"):
-            continue  # streaming plans materialize lazily; sources write
-        plan = _plan(spark, sf_dir, name)
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+    bad = sorted(n for n, v in registry_walk.items() if v.cartesian)
+    assert not bad, f"cartesian products: {bad}"
 
 
 @pytest.mark.parametrize(
@@ -101,7 +188,7 @@ def test_windows_always_partitioned(spark, sf_dir, name):
     assert "windowspecdefinition()" not in plan.lower().replace(" ", "")
 
 
-def test_unpartitioned_windows_are_bounded(spark, sf_dir):
+def test_unpartitioned_windows_are_bounded(registry_walk):
     """An unpartitioned Window.orderBy funnels its whole input through
     one task, so it is only allowed above a node that bounds the row
     count (Aggregate / LocalRelation / Limit / Deduplicate) — the
@@ -120,47 +207,11 @@ def test_unpartitioned_windows_are_bounded(spark, sf_dir):
         "quality_sorted_neighborhood_er", # SNM is global-sort by definition
         "similarity_hybrid_rrf",          # ranks over filtered candidate set
     }
-    bounding = {
-        "Aggregate",
-        "LocalRelation",
-        "OneRowRelation",
-        "GlobalLimit",
-        "Deduplicate",
-    }
-
-    def walk(node):
-        yield node
-        ch = node.children()
-        for i in range(ch.size()):
-            yield from walk(ch.apply(i))
-
-    def is_bounded(node):
-        """True iff EVERY path from this node down to a relation scan
-        passes through a bounding node — 'an Aggregate exists somewhere
-        in the subtree' is not enough (a raw fact table cross-joined
-        with a broadcast 1-row aggregate contains an Aggregate yet
-        keeps the fact table's cardinality; ADVICE r4)."""
-        if node.nodeName() in bounding:
-            return True
-        ch = node.children()
-        if ch.size() == 0:
-            return False  # leaf relation scan: unbounded by definition
-        return all(is_bounded(ch.apply(i)) for i in range(ch.size()))
-
-    offenders = []
-    for name in sorted(registry.QUERIES):
-        if name.startswith("stream_") or name.startswith("source_"):
-            continue
-        plan = registry.QUERIES[name](spark, sf_dir)._jdf.queryExecution().optimizedPlan()
-        for node in walk(plan):
-            if node.nodeName() == "Window" and node.partitionSpec().isEmpty():
-                bounded = all(
-                    is_bounded(node.children().apply(i))
-                    for i in range(node.children().size())
-                )
-                if not bounded and name not in allowed_raw_input:
-                    offenders.append(name)
-    assert not offenders, f"unbounded global windows: {sorted(set(offenders))}"
+    offenders = sorted(
+        n for n, v in registry_walk.items()
+        if v.unbounded_window and n not in allowed_raw_input
+    )
+    assert not offenders, f"unbounded global windows: {offenders}"
 
 
 def test_tpch_dim_joins_broadcast(spark, sf_dir):
@@ -462,81 +513,87 @@ def test_equidepth_cutpoints_no_total_order_exchange(spark, sf_dir):
 # the >100k-row absolute rule below still applies as the backstop if
 # the design assumption ever breaks.
 _DIMENSION_SCALE_BY_DESIGN = {
-    # support>=2 co-purchase edges SATURATE at part-pair scale:
-    # measured 3445 rows at sf0.01 -> 3573 at sf0.1 (+3.7% across 10x
-    # data) — see _copurchase_edges' docstring for the r7 analysis.
-    "analytics_triangle_count",
+    "analytics_triangle_count": (
+        "support>=2 co-purchase edges SATURATE at part-pair scale: "
+        "measured 3445 rows at sf0.01 -> 3573 at sf0.1 (+3.7% across 10x "
+        "data) — see _copurchase_edges' docstring for the r7 analysis"
+    ),
 }
 
 
-# Checkpoints waived from the OVERstatement bound (overstated_records)
-# — each entry must satisfy both waiver conditions documented on that
-# helper: all downstream broadcasts explicit, and corpus-scaled truth.
+# Plain checkpoints waived from the OVERstatement bound
+# (overstated_records; checkpoint_conservative records are exempt by
+# construction). Each entry states why the inflated estimate decides
+# no join: every broadcast downstream of the checkpoint is an explicit
+# F.broadcast/hint, and any join left to AQE is between relations that
+# scale with the corpus, where no-broadcast is the 100 TB plan anyway.
 _OVERSTATED_WAIVED = {
-    # The LSH candidate-pair checkpoint inherits the band self-join's
-    # cardinality estimate (~175 GiB for 25 rows at sf0.01, PLANS.md
-    # "Checkpointed intermediates"). Safe: its consumers broadcast
-    # cand_docs via an explicit F.broadcast hint (dedup.py), and
-    # candidate pairs grow with the corpus, so at 100 TB the
-    # no-broadcast default the inflation forces is the correct plan.
-    "dedup_minhash_lsh",
-    # Iterative BSP loops: each round's checkpoint inherits the
-    # previous round's multiplied join estimate (measured ~6e27 B for
-    # 8.8k kcore edges). The inflated relations (surviving edges,
-    # node labels, keep-sets) all scale with the graph, so
-    # no-broadcast is the deliberate scale-safe plan (kcore hints
-    # shuffle_hash explicitly; VERDICT r5); scalars broadcast via
-    # explicit F.broadcast.
-    "analytics_kcore",
-    "analytics_louvain_one_level",
-    # r17/r18 conservative checkpoints (checkpoint_conservative
-    # rewraps with NO origin stats -> Long.MaxValue by design): the
-    # no-broadcast posture is the point — edges/nodes/degree tables,
-    # the recursive chain-edge relation and the winnowed fingerprint
-    # rows all scale with the data, and every intended broadcast in
-    # these queries is an explicit F.broadcast hint (ADVICE r17 #4;
-    # winnowing's plain checkpoint read 0.96 B/row — the r7 class —
-    # and moved to the conservative form in r18).
-    "analytics_pagerank_lite",
-    "analytics_graph_modularity",
-    "sql_recursive_cte",
-    "dedup_winnowing_pairs",
+    "dedup_minhash_lsh": (
+        "the LSH candidate-pair checkpoint inherits the band self-join's "
+        "cardinality estimate (~175 GiB for 25 rows at sf0.01); its "
+        "consumers broadcast cand_docs via an explicit F.broadcast, and "
+        "candidate pairs grow with the corpus"
+    ),
+    "analytics_kcore": (
+        "iterative BSP rounds: each round's checkpoint inherits the "
+        "previous round's multiplied join estimate (~6e27 B for 8.8k "
+        "edges); surviving edges and keep-sets scale with the graph, the "
+        "loop hints shuffle_hash explicitly and scalars broadcast via "
+        "explicit F.broadcast"
+    ),
+    "analytics_louvain_one_level": (
+        "iterative BSP rounds inherit multiplied join estimates; node "
+        "labels scale with the graph and scalars broadcast via explicit "
+        "F.broadcast"
+    ),
+    "similarity_pca_power_iteration": (
+        "the d² covariance cells and each d-row matvec inherit the "
+        "moment pass's multiplied estimate (~4e11 B/row, then ~7e17 "
+        "to 8e49 per round); every join downstream of them broadcasts "
+        "its small side (the vector, the norm, the sign) by an explicit "
+        "F.broadcast, and cov is only ever the streamed side"
+    ),
+    "similarity_matryoshka_eval": (
+        "the per-prefix top-k checkpoint (N_QUERIES x TOP_K x dims "
+        "rows) inherits the query x corpus pair estimate (~1.5e8 "
+        "B/row); its one downstream join broadcasts the truth set by an "
+        "explicit F.broadcast, and the rest is a groupBy"
+    ),
 }
 
 
-@pytest.mark.parametrize("name", CHECKPOINT_AUDITED)
-def test_checkpointed_intermediates_not_broadcast_bait(spark, sf_dir, name):
-    """Class-wide generalization of the co-purchase edge-stats guard
-    (the r7 regression): EVERY localCheckpoint'ed intermediate these
-    queries materialize must advertise a sane size estimate —
-    >= 8 B per actual row (the buggy r7 kernel sat at ~1.25 B/row at
-    any SF), and above the LIVE autoBroadcastJoinThreshold once the
-    intermediate exceeds 100k rows — or downstream AQE flips its
-    joins to broadcasting a big relation (measured: kcore 3.6->16.3s
-    + three graph-op OOMs at sf0.1)."""
-    from hive_task_spark.plans.checkpoints import (
-        overstated_records,
-        record_checkpoints,
-        understated_records,
-    )
+def test_registry_walk_sees_every_waived_checkpoint(registry_walk):
+    """The walk the per-query checkpoint guard reads must see
+    checkpoints at all (positive control: a recorder that sees nothing
+    guards nothing), and every waiver must name a query that still
+    checkpoints."""
+    checkpointing = {n for n, v in registry_walk.items() if v.checkpoints}
+    assert checkpointing, "the registry walk recorded no checkpoint at all"
+    stale = (set(_DIMENSION_SCALE_BY_DESIGN) | set(_OVERSTATED_WAIVED)) - checkpointing
+    assert not stale, f"waivers name queries that no longer checkpoint: {stale}"
 
-    with record_checkpoints() as recs:
-        registry.QUERIES[name](spark, sf_dir)
-    assert recs, f"{name}: expected localCheckpoint use (audit list stale?)"
+
+@pytest.mark.parametrize(
+    "name",
+    sorted(n for n in registry.QUERIES if not n.startswith(("stream_", "source_"))),
+)
+def test_checkpointed_intermediates_not_broadcast_bait(registry_walk, name):
+    """Class-wide generalization of the co-purchase edge-stats guard
+    (the r7 regression), over every query the registry walk builds:
+    each localCheckpoint'ed intermediate must advertise a sane size
+    estimate — >= 8 B per actual row (the buggy r7 kernel sat at
+    ~1.25 B/row at any SF), no more than 1e6 B per row unless waived,
+    and above the LIVE autoBroadcastJoinThreshold once it exceeds 100k
+    rows — or downstream AQE flips its joins to broadcasting a big
+    relation (measured: kcore 3.6->16.3s + three graph-op OOMs at
+    sf0.1). A query that records no checkpoint has nothing to violate."""
+    v = registry_walk[name]
+    problems = list(v.below_threshold)
     if name not in _DIMENSION_SCALE_BY_DESIGN:
-        bad = understated_records(recs, min_rows=1000)
-        assert not bad, f"{name}: {bad}"
+        problems += v.understated
     if name not in _OVERSTATED_WAIVED:
-        inflated = overstated_records(recs)
-        assert not inflated, f"{name}: {inflated}"
-    threshold = _broadcast_threshold_bytes(spark)
-    for i, rec in enumerate(recs):
-        if rec.rows > 100_000:
-            assert rec.stats_bytes > threshold, (
-                f"{name} checkpoint #{i}: {rec.rows} rows but stats "
-                f"{rec.stats_bytes}B <= autoBroadcastJoinThreshold "
-                f"{threshold}B — AQE would broadcast it"
-            )
+        problems += v.overstated
+    assert not problems, f"{name}: checkpoint stats violations: {problems}"
 
 
 def test_runtime_bloom_filter_injected(spark, sf_dir):
