@@ -33,6 +33,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle SQL per query; omissions get rows-only checks."""
+    """DuckDB oracle SQL per query; every query has one."""
     registry.load_all()
     return dict(registry.ORACLES)

@@ -1,7 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ...}. $SPARK_GRAFT_CPUS defaults to the
+CPUs this process may use, and the parallel canary sizes to it.
 
 Each query is timed end-to-end (plan construction + execution) with a
 `noop` sink so we measure engine work, not driver-side row transfer.
@@ -22,7 +23,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 from hive_task_spark import registry  # noqa: E402
-from hive_task_spark.plans.session import get_session  # noqa: E402
+from hive_task_spark.plans.session import default_parallelism, get_session  # noqa: E402
 
 # Import at module top so a broken/missing bench_diff fails FAST —
 # before the ~40 s measurement run — instead of aborting at JSON-build
@@ -180,7 +181,7 @@ def _parallel_canary(workers: int = 32) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_parallelism()
     registry.load_all()
     spark = get_session(app_name="hive_task_spark_bench", cpus=cpus)
 

@@ -6,8 +6,9 @@ All grouped aggregates here compile to partial (map-side) + final hash
 aggregation — the shuffle carries one row per (partition, group), which
 is what makes them safe at 100 TB. Approx sketches (HLL++, t-digest-ish
 percentile) are the designed scale path for distinct counts/quantiles;
-their values are engine-specific so they carry rows-only checks, with
-exact twins oracle-checked alongside.
+their values are engine-specific, so their oracles check exact
+properties of them (error bounds, sandwich ranks), with exact twins
+oracle-checked alongside.
 """
 
 from __future__ import annotations

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_task_spark.functions import exact
+from hive_task_spark.plans.session import scoped_conf
 from hive_task_spark.registry import register
 from hive_task_spark.tables import load
 
@@ -589,19 +590,12 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the filtered orders side is broadcast-sized (InjectRuntimeFilter
     # skips probable-broadcast joins — a BHJ build side is its own
     # runtime filter). At 100 TB all three gates pass by default.
-    scoped = {
+    with scoped_conf(spark, {
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1KB",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "1GB",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    old = {k: spark.conf.get(k) for k in scoped}
-    for k, v in scoped.items():
-        spark.conf.set(k, v)
-    try:
+    }):
         out._jdf.queryExecution().optimizedPlan()  # lock in the 100 TB plan
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
     return out
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_task_spark.functions import exact
+from hive_task_spark.plans.session import scoped_conf
 from hive_task_spark.registry import register
 from hive_task_spark.tables import load
 
@@ -1401,15 +1402,11 @@ def sql_analyze_cbo_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # explicit NDV accuracy knob (the r11 policy): default 0.05 reads
     # 99 for the 96-distinct column; 0.01 is sparse-exact here
-    prev_err = spark.conf.get("spark.sql.statistics.ndv.maxError")
-    spark.conf.set("spark.sql.statistics.ndv.maxError", "0.01")
-    try:
+    with scoped_conf(spark, {"spark.sql.statistics.ndv.maxError": "0.01"}):
         spark.sql(
             f"ANALYZE TABLE {tbl} COMPUTE STATISTICS "
             "FOR COLUMNS bucket97, o_orderpriority, o_orderstatus"
         )
-    finally:
-        spark.conf.set("spark.sql.statistics.ndv.maxError", prev_err)
     rows = []
     for col in ["bucket97", "o_orderpriority", "o_orderstatus"]:
         info = {

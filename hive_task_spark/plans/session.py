@@ -21,6 +21,8 @@ right configuration posture.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -36,10 +38,13 @@ _PACKAGE_ROOT = os.path.dirname(
 def default_parallelism() -> int:
     """Worker sizing — the analog of the reference's CPU-count probe
     (/root/reference/src/scheduler.lisp:16-22), delegated to the OS."""
+    # $SPARK_GRAFT_CPUS, else the CPUs this process may run on (not the
+    # host's count, which a container's CPU set can be far below).
+    n = len(os.sched_getaffinity(0))
     try:
-        return max(2, int(os.environ.get("SPARK_GRAFT_CPUS", "") or os.cpu_count() or 4))
+        return max(2, int(os.environ.get("SPARK_GRAFT_CPUS", "") or n))
     except ValueError:
-        return os.cpu_count() or 4
+        return n
 
 
 def get_session(
@@ -112,3 +117,25 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # static conf on some builds — keep going
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set ``conf`` on the session for the ``with`` block only.
+
+    On exit, even when the block raises, each key goes back to its value
+    in ``spark.conf.getAll``, or is unset if it had none. Restoring what
+    ``spark.conf.get`` returned would not do: for an unset key that is
+    the default, and setting it leaves the session conf changed.
+    """
+    before = spark.conf.getAll
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k in conf:
+            if k in before:
+                spark.conf.set(k, before[k])
+            else:
+                spark.conf.unset(k)

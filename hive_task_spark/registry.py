@@ -2,13 +2,13 @@
 
 Each operator from SURVEY.md §2B registers:
   * a named query: ``(spark, sf_dir) -> DataFrame`` (PySpark, Spark-first)
-  * optionally a DuckDB-runnable ANSI-SQL oracle string computing the
-    same result on the same parquet tables.
+  * a DuckDB-runnable ANSI-SQL oracle string computing the same result
+    on the same parquet tables (required: engine-specific values, such
+    as approximate sketches, LSH or streaming state, are put on the
+    edge as exact properties the oracle can state).
 
 The driver compares row-count + schema + order-insensitive value hash
-at sf=0.01; queries without an oracle get a weaker rows-only check
-(reserved for genuinely non-SQL-expressible ops: approximate sketches,
-LSH, stateful streaming).
+at sf=0.01.
 
 Cross-engine discipline (SURVEY.md §7 risk register):
   * alias every computed column identically on both sides;
@@ -108,16 +108,15 @@ AUDIT_WINDOW: tuple[str, ...] = (
 )
 
 
-def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a named query and (optionally) its DuckDB oracle SQL."""
+def register(name: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
+    """Register a named query and its DuckDB oracle SQL."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query name: {name}")
         QUERIES[name] = fn
         REGISTRATION_ORDER.append(name)
-        if oracle is not None:
-            ORACLES[name] = oracle
+        ORACLES[name] = oracle
         return fn
 
     return deco

@@ -738,29 +738,24 @@ def source_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> Data
     whole table). Fixture: orders written partitioned by status, then
     the 'F' partition alone overwritten with its post-1997 subset;
     the re-read proves 'O'/'P' survived untouched and 'F' was
-    replaced, value-exactly. The conf is set per-write and restored
-    (queries must not depend on session conf — CLAUDE.md)."""
-    import shutil
-
+    replaced, value-exactly. The mode is the one write's option, so the
+    session conf is never touched (queries must not depend on session
+    conf — CLAUDE.md)."""
     path = _scratch("orders_dpo")
     shutil.rmtree(path, ignore_errors=True)
     o = load(spark, sf_dir, "orders")
     o.write.partitionBy("o_orderstatus").mode("overwrite").parquet(path)
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            o.filter(
-                (F.col("o_orderstatus") == "F")
-                & (F.year("o_orderdate") >= 1997)
-            )
-            .write.partitionBy("o_orderstatus")
-            .mode("overwrite")
-            .parquet(path)
+    (
+        o.filter(
+            (F.col("o_orderstatus") == "F")
+            & (F.year("o_orderdate") >= 1997)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        .write.partitionBy("o_orderstatus")
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
 
     return (
         spark.read.parquet(path)

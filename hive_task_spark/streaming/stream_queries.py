@@ -2,12 +2,12 @@
 streaming block.
 
 Verification strategy (SURVEY.md §5.2.3): every stream runs with
-``Trigger.AvailableNow`` over the static events parquet into a memory
-sink, and the materialized result is oracle-checked against the
-equivalent BATCH SQL — exact batch-replay equivalence, stronger than
-rows-only. The one genuinely stateful custom operator
-(`stream_stateful_running`) is rows-only (state emission cadence is
-engine-specific).
+``Trigger.AvailableNow`` over the static events parquet (or a staged
+copy of it, replayed as throttled micro-batches) into a sink, and the
+materialized result is oracle-checked against the equivalent BATCH SQL
+— exact batch-replay equivalence. `_drain` owns that run lifecycle and
+`_staged_stream` the staging, so no query here sets session conf or
+starts a stream by hand.
 
 100 TB posture: file source → Kafka source is a one-line swap; the
 shuffle per micro-batch is keyed the same as batch; watermark bounds
@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 
 import pandas as pd
 
@@ -33,9 +34,10 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from hive_task_spark.functions import exact
-from hive_task_spark.plans.session import apply_runtime_conf
+from hive_task_spark.plans.session import apply_runtime_conf, scoped_conf
 from hive_task_spark.registry import register
 from hive_task_spark.tables import load, normalize_events_ts, parquet_schema
 
@@ -66,34 +68,73 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(raw)
 
 
-def _run_to_table(
-    spark: SparkSession, sdf: DataFrame, name: str, output_mode: str
-) -> DataFrame:
-    """Execute to completion (AvailableNow) into a memory sink; return
-    the materialized batch DataFrame. Fresh checkpoint per run so the
-    file source re-reads the input."""
+def _fresh_cp(name: str) -> str:
+    """An empty checkpoint dir, so the file source re-reads its input."""
     cp = _scratch_join(f"cp_{name}")
     shutil.rmtree(cp, ignore_errors=True)
-    # State-store overhead scales with the shuffle-partition count (2
-    # checkpoint files per partition per batch); replay state here is
-    # tiny, so pin 8 state partitions for the stream run — halves
-    # replay wall-clock at sf0.1. Values are partitioning-independent;
-    # a real cluster sizes this to executor cores instead.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    return cp
+
+
+def _drain(writer: DataStreamWriter, cp: str) -> StreamingQuery:
+    """Run one stream to completion under Trigger.AvailableNow with its
+    checkpoint at `cp`, and return the finished query. `cp` is not
+    cleared here: the exactly-once restart drill reuses it.
+
+    State-store overhead scales with the shuffle-partition count (2
+    checkpoint files per partition per batch); replay state here is
+    tiny, so the run pins 8 state partitions — halves replay wall-clock
+    at sf0.1. Values are partitioning-independent; a real cluster sizes
+    this to executor cores instead."""
+    with scoped_conf(writer._spark, {"spark.sql.shuffle.partitions": "8"}):
         q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
+            writer.trigger(availableNow=True)
             .option("checkpointLocation", cp)
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return q
+
+
+def _run_to_table(
+    spark: SparkSession, sdf: DataFrame, name: str, output_mode: str
+) -> DataFrame:
+    """Drain into a memory sink named `name`, checkpointed fresh at
+    `cp_<name>`; return the materialized batch DataFrame."""
+    _drain(
+        sdf.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        _fresh_cp(name),
+    )
     return spark.table(name)
+
+
+def _staged_stream(
+    spark: SparkSession, tag: str, batches: list[DataFrame]
+) -> DataFrame:
+    """Replay `batches` as throttled micro-batches: each DataFrame is
+    written into a fresh scratch dir, the files are stamped with
+    ascending mtimes in batch order, and the returned file stream reads
+    one file per trigger (maxFilesPerTrigger=1; FileStreamSource orders
+    by modification time, and the 100 s steps are far above any
+    filesystem timestamp granularity). A batch written as n files
+    replays as n micro-batches. The schema is the batches' own, so no
+    footer-read job runs."""
+    src = _scratch_join(f"staged_{tag}")
+    shutil.rmtree(src, ignore_errors=True)
+    files: list[str] = []
+    for b in batches:
+        b.write.mode("append").parquet(src)
+        files += sorted(
+            f for f in os.listdir(src) if f.endswith(".parquet") and f not in files
+        )
+    now = time.time()
+    for i, f in enumerate(files):
+        t = now - 100 * (len(files) - i)
+        os.utime(os.path.join(src, f), (t, t))
+    return (
+        spark.readStream.schema(batches[0].schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
 
 
 @register(
@@ -340,15 +381,7 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    cp = _scratch_join("cp_stream_fb")
-    shutil.rmtree(cp, ignore_errors=True)
-    q = (
-        s.writeStream.foreachBatch(_sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", cp)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(s.writeStream.foreachBatch(_sink), _fresh_cp("stream_fb"))
     back = spark.read.parquet(out_dir)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"), (F.sum(exact.cents(F.col("value"))).cast("double") / 100).alias("total_value")
@@ -527,17 +560,8 @@ def stream_multibatch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     state-evolution path every other stream here (single file = one
     batch) cannot exercise. Batch-replay oracle: the final complete-
     mode table must equal the one-shot batch aggregate exactly."""
-    apply_runtime_conf(spark)
-    src_dir = _scratch_join("events_multibatch")
-    shutil.rmtree(src_dir, ignore_errors=True)
     e = load(spark, sf_dir, "events")
-    e.repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    s = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    s = _staged_stream(spark, "multibatch", [e.repartition(4)])
     agg = s.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value_r"),
@@ -577,35 +601,13 @@ def stream_late_drop_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     states. A unit error in the event-time column (the round-2
     silent-wrongness class) makes this output explode or vanish — it
     cannot pass silently."""
-    import time as _time
-
-    apply_runtime_conf(spark)
-    src_dir = _scratch_join("events_late_drop")
-    shutil.rmtree(src_dir, ignore_errors=True)
     e = load(spark, sf_dir, "events")
     c_hi, c_lo = "2024-01-25 00:00:00", "2024-01-20 00:00:00"
-    batches = [
-        e.filter(F.col("ts") >= c_hi),
-        e.filter((F.col("ts") >= c_lo) & (F.col("ts") < c_hi)),
-        e.filter(F.col("ts") < c_lo),
-    ]
-    now = _time.time()
-    seen: set[str] = set()
-    for i, b in enumerate(batches):
-        b.coalesce(1).write.mode("append").parquet(src_dir)
-        fresh = {
-            f for f in os.listdir(src_dir) if f.endswith(".parquet")
-        } - seen
-        for f in fresh:
-            age = 300 - 100 * i  # older mtime => processed earlier
-            os.utime(os.path.join(src_dir, f), (now - age, now - age))
-        seen |= fresh
-    schema = spark.read.parquet(src_dir).schema
-    s = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    s = _staged_stream(spark, "late_drop", [
+        e.filter(F.col("ts") >= c_hi).coalesce(1),
+        e.filter((F.col("ts") >= c_lo) & (F.col("ts") < c_hi)).coalesce(1),
+        e.filter(F.col("ts") < c_lo).coalesce(1),
+    ])
     agg = (
         s.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -640,21 +642,14 @@ def stream_file_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes to object storage and downstream jobs read the manifest,
     never partial files."""
     out_dir = _scratch_join("file_sink_out")
-    cp = _scratch_join("cp_file_sink")
     shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(cp, ignore_errors=True)
     s = _events_stream(spark, sf_dir).filter(F.col("value") > 10.0).select(
         "event_id", "event_type", "value"
     )
-    q = (
-        s.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", cp)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        s.writeStream.format("parquet").option("path", out_dir).outputMode("append"),
+        _fresh_cp("file_sink"),
     )
-    q.awaitTermination()
     return (
         spark.read.parquet(out_dir)
         .groupBy("event_type")
@@ -687,27 +682,12 @@ def stream_statestore_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream ran. State key/value arrive as structs; the aggregation
     buffer's count and sum fields are flattened positionally."""
     name = "stream_statestore_inspect_run"
-    cp = _scratch_join(f"cp_{name}")
-    shutil.rmtree(cp, ignore_errors=True)
     s = _events_stream(spark, sf_dir)
     agg = s.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"), (F.sum(exact.cents(F.col("value"))).cast("double") / 100).alias("total_value")
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", cp)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    state = spark.read.format("statestore").load(cp)
+    _run_to_table(spark, agg, name, "update")
+    state = spark.read.format("statestore").load(_scratch_join(f"cp_{name}"))
     # key = (user_id); value = the agg buffer (count, sum) in
     # declaration order — flatten positionally, then re-alias. The
     # sum buffer holds exact BIGINT cents since r18 (order-independent
@@ -817,30 +797,12 @@ def stream_outer_join_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     least(max view ts, max purchase ts) - 1h. At
     100 TB this is THE outer-enrichment topology: state is bounded
     by watermark + join range, nulls are late but exact."""
-    import time as _time
-
-    apply_runtime_conf(spark)
-    src_dir = _scratch_join("events_outer_join")
-    shutil.rmtree(src_dir, ignore_errors=True)
-
     e = load(spark, sf_dir, "events")
     cut = "2024-01-21 00:00:00"
-    now = _time.time()
-    seen: set[str] = set()
-    for i, b in enumerate([e.filter(F.col("ts") < cut), e.filter(F.col("ts") >= cut)]):
-        b.coalesce(1).write.mode("append").parquet(src_dir)
-        fresh = {f for f in os.listdir(src_dir) if f.endswith(".parquet")} - seen
-        for f in fresh:
-            age = 300 - 100 * i
-            os.utime(os.path.join(src_dir, f), (now - age, now - age))
-        seen |= fresh
-    schema = spark.read.parquet(src_dir).schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    s = normalize_events_ts(raw)
+    s = _staged_stream(spark, "outer_join", [
+        e.filter(F.col("ts") < cut).coalesce(1),
+        e.filter(F.col("ts") >= cut).coalesce(1),
+    ])
     a = (
         s.filter(F.col("event_type") == "view")
         .select(F.col("event_id").alias("view_id"), "user_id", F.col("ts").alias("ts_a"))
@@ -921,20 +883,11 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     is why real systems keep state in an indexed table format and
     merge-on-read instead of rewriting (same join shape either
     way)."""
-    apply_runtime_conf(spark)
-    src_dir = _scratch_join("events_upsert_src")
     state_root = _scratch_join("upsert_state")
-    shutil.rmtree(src_dir, ignore_errors=True)
     shutil.rmtree(state_root, ignore_errors=True)
     os.makedirs(state_root)
     e = load(spark, sf_dir, "events")
-    e.repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    s = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    s = _staged_stream(spark, "upsert", [e.repartition(4)])
     versions = []
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -977,15 +930,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         versions.append(v)
 
-    cp = _scratch_join("cp_stream_upsert_sink")
-    shutil.rmtree(cp, ignore_errors=True)
-    q = (
-        s.writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", cp)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(s.writeStream.foreachBatch(merge_batch), _fresh_cp("stream_upsert_sink"))
     final = spark.read.parquet(os.path.join(state_root, f"v{versions[-1]}"))
     return final.select(
         "user_id",
@@ -1022,7 +967,6 @@ def stream_lambda_backfill_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployments silently double-count or drop the cutover day; the
     path tag keeps the audit explicit. The streaming side filters
     BEFORE aggregating, so its state covers only tail days."""
-    apply_runtime_conf(spark)
     e = load(spark, sf_dir, "events")
     day = F.floor(F.col("ts").cast("double") / 86400).cast("long")
     cut_row = e.agg((F.min(day) + 20).alias("c"))
@@ -1103,17 +1047,10 @@ def stream_observe_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("user_id").alias("max_user"),
     )
     name = "observe_progress_sink"
-    cp = _scratch_join(f"cp_{name}")
-    shutil.rmtree(cp, ignore_errors=True)
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", cp)
-        .start()
+    q = _drain(
+        sdf.writeStream.format("memory").queryName(name).outputMode("append"),
+        _fresh_cp(name),
     )
-    q.awaitTermination()
     n_events, total, mn, mx = 0, 0.0, None, None
     for p in q.recentProgress:
         m = p["observedMetrics"].get("health") if p["observedMetrics"] else None
@@ -1290,17 +1227,8 @@ def stream_update_mode_progression(spark: SparkSession, sf_dir: str) -> DataFram
     dashboards (append can't emit running aggregates, complete
     re-ships the world every batch); sink volume is changed-keys per
     batch, not all keys."""
-    apply_runtime_conf(spark)
-    src_dir = _scratch_join("events_multibatch_upd")
-    shutil.rmtree(src_dir, ignore_errors=True)
     e = load(spark, sf_dir, "events")
-    e.repartition(4).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    s = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
+    s = _staged_stream(spark, "multibatch_upd", [e.repartition(4)])
     agg = s.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value_r"),
@@ -1625,9 +1553,7 @@ def stream_python_datasource_sink(
     spark.dataSource.register(_TickStreamSource)
     spark.dataSource.register(_JsonLinesStreamSink)
     out = _scratch_join("pystreamsink_out")
-    cp = _scratch_join("cp_stream_python_datasource_sink")
     shutil.rmtree(out, ignore_errors=True)
-    shutil.rmtree(cp, ignore_errors=True)
     os.makedirs(out)
     raw = (
         spark.readStream.format("tickstream")
@@ -1635,14 +1561,10 @@ def stream_python_datasource_sink(
         .option("numPartitions", "4")
         .load()
     )
-    q = (
-        raw.writeStream.format("pyjsonlstreamsink")
-        .option("path", out)
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        raw.writeStream.format("pyjsonlstreamsink").option("path", out),
+        _fresh_cp("stream_python_datasource_sink"),
     )
-    q.awaitTermination()
     with open(os.path.join(out, "_COMMITLOG")) as fh:
         logged = sum(_json.loads(line)["rows"] for line in fh)
     if logged != 1000:
@@ -1656,6 +1578,12 @@ def stream_python_datasource_sink(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("v").cast("long").alias("v_sum"),
     )
+
+
+_PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 
 
 @register(
@@ -1676,8 +1604,8 @@ def stream_rocksdb_statestore(spark: SparkSession, sf_dir: str) -> DataFrame:
     OOMs); RocksDB keeps state on local disk with a block-cache and
     ships changelogs to the checkpoint, so state scales with disk, not
     heap. Values are backend-independent — the oracle is the plain
-    batch aggregate — and the provider conf is scoped to this run and
-    restored (queries must leave a vanilla session untouched).
+    batch aggregate — and the provider conf is scoped to this run
+    (queries must leave a vanilla session untouched).
     tests/test_properties.py asserts the checkpoint actually contains
     RocksDB artifacts (zip snapshots, no HDFS .delta files)."""
     s = _events_stream(spark, sf_dir)
@@ -1685,17 +1613,8 @@ def stream_rocksdb_statestore(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value_r"),
     )
-    key = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    old = spark.conf.get(key)
-    spark.conf.set(key, rocksdb)
-    try:
+    with scoped_conf(spark, {_PROVIDER_KEY: _ROCKSDB_PROVIDER}):
         return _run_to_table(spark, agg, "stream_rocksdb_statestore", "complete")
-    finally:
-        spark.conf.set(key, old)
 
 
 @register(
@@ -1840,9 +1759,6 @@ def stream_state_ttl_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     |expired keys|, not |events|."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    apply_runtime_conf(spark)
-    src_dir = _scratch_join("events_ttl_twobatch")
-    shutil.rmtree(src_dir, ignore_errors=True)
     e = load(spark, sf_dir, "events").select("user_id", "ts")
     # ONE aggregation pass feeds both the replay sentinel (max ts) and
     # the magic-value collision guard: -1 is the harness's sentinel
@@ -1858,8 +1774,8 @@ def stream_state_ttl_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hour on the host would shift a datetime round-trip by an hour.
     # unix_micros/timestamp_micros are epoch-based (no local
     # interpretation); the NTZ events branch casts through the session
-    # tz, which apply_runtime_conf pinned to UTC above (fixed offset,
-    # no fold), so both encodings round-trip bit-exactly.
+    # tz, which `load` pinned to UTC above (fixed offset, no fold), so
+    # both encodings round-trip bit-exactly.
     stats = e.agg(
         F.unix_micros(F.max("ts").cast("timestamp")).alias("mx_us"),
         F.sum((F.col("user_id") == -1).cast("int")).alias("n_collide"),
@@ -1869,10 +1785,9 @@ def stream_state_ttl_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
             "events fixture contains user_id = -1 — collides with the "
             "TTL replay sentinel key; pick a different sentinel"
         )
-    e.coalesce(1).write.mode("overwrite").parquet(src_dir)
     # build the one-row sentinel from the collected max — no second
-    # scan; dtypes mirror e's so the merged stream dir keeps a single
-    # parquet schema.
+    # scan; dtypes mirror e's so the stream dir keeps a single parquet
+    # schema. Staged after the events file, it is batch 2.
     dt = dict(e.dtypes)
     sentinel = spark.range(1).select(
         F.lit(-1).cast(dt["user_id"]).alias("user_id"),
@@ -1880,30 +1795,9 @@ def stream_state_ttl_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(stats["mx_us"] + 2 * 3600 * 1_000_000)
         ).cast(dt["ts"]).alias("ts"),
     )
-    sent_dir = _scratch_join("events_ttl_sentinel")
-    shutil.rmtree(sent_dir, ignore_errors=True)
-    sentinel.coalesce(1).write.mode("overwrite").parquet(sent_dir)
-    # merge the sentinel shard into the stream dir with a LATER mtime:
-    # the file source processes oldest-first, so batch 1 = the events
-    # file, batch 2 = the sentinel (maxFilesPerTrigger=1 splits them)
-    import glob as _glob
-    import time as _time
-
-    (events_file,) = _glob.glob(os.path.join(src_dir, "part-*.parquet"))
-    (sent_file,) = _glob.glob(os.path.join(sent_dir, "part-*.parquet"))
-    sent_target = os.path.join(src_dir, "part-sentinel.parquet")
-    shutil.move(sent_file, sent_target)
-    now = _time.time()
-    os.utime(events_file, (now - 100, now - 100))
-    os.utime(sent_target, (now, now))
-    schema = spark.read.parquet(src_dir).schema
-    s = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "part-*.parquet")
-        .parquet(src_dir)
-        .withWatermark("ts", "1 hour")
-    )
+    s = _staged_stream(
+        spark, "ttl_twobatch", [e.coalesce(1), sentinel.coalesce(1)]
+    ).withWatermark("ts", "1 hour")
     out = s.groupBy("user_id").applyInPandasWithState(
         _ttl_evict_per_user,
         _TTL_OUT_SCHEMA,
@@ -1977,10 +1871,7 @@ def stream_foreachbatch_exactly_once(
     version rewrite here is the harness-sized stand-in. The replay
     orchestration (3 throttled micro-batches + a restart probe) is
     test harness, not production shape."""
-    apply_runtime_conf(spark)
-    src_dir = _scratch_join("events_eo_src")
     state_root = _scratch_join("eo_state")
-    shutil.rmtree(src_dir, ignore_errors=True)
     shutil.rmtree(state_root, ignore_errors=True)
     commit_dir = os.path.join(state_root, "committed")
     os.makedirs(commit_dir)
@@ -1989,8 +1880,7 @@ def stream_foreachbatch_exactly_once(
         "user_id",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
     )
-    e.repartition(3).write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
+    s = _staged_stream(spark, "eo", [e.repartition(3)])
 
     def _marker(batch_id: int) -> str:
         return os.path.join(commit_dir, f"batch_{batch_id}.done")
@@ -2061,30 +1951,10 @@ def stream_foreachbatch_exactly_once(
             fh.write(str(v))
         os.rename(tmp, _marker(batch_id))
 
-    def _start() -> None:
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-            .writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", cp)
-            .start()
-        )
-        q.awaitTermination()
-
-    cp = _scratch_join("cp_stream_foreachbatch_exactly_once")
-    shutil.rmtree(cp, ignore_errors=True)
-    # the per-batch merge is a small keyed aggregate (|users| rows):
-    # 32 shuffle partitions are pure task overhead here — pin 8 for
-    # the replay, exactly like _run_to_table (values are
-    # partitioning-independent; a cluster sizes this to cores)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        _start()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # the per-batch merge is a small keyed aggregate (|users| rows), so
+    # _drain's 8-partition pin suits it too
+    cp = _fresh_cp("stream_foreachbatch_exactly_once")
+    _drain(s.writeStream.foreachBatch(merge_batch), cp)
     n_committed = _latest_committed()
     n_markers = len(
         [f for f in os.listdir(commit_dir) if f.endswith(".done")]
@@ -2096,9 +1966,9 @@ def stream_foreachbatch_exactly_once(
         )
     # drill 1 — duplicate delivery: re-run the LAST batch id with a
     # superset payload; the txn log alone must make it a no-op
-    merge_batch(spark.read.parquet(src_dir), n_committed - 1)
+    merge_batch(e, n_committed - 1)
     # drill 2 — restart: same checkpoint, zero new batches to process
-    _start()
+    _drain(s.writeStream.foreachBatch(merge_batch), cp)
     if _latest_committed() != n_committed:
         raise ValueError(
             "exactly-once violated: duplicate/restarted batch created "
@@ -2123,35 +1993,14 @@ def stream_foreachbatch_exactly_once(
     )
 
 
-def _cohort_stream_src(spark: SparkSession, sf_dir: str, tag: str) -> str:
-    """Stage the events table as three key-disjoint cohort files
-    (user_id % 3 == k) with staggered mtimes, so a file stream with
-    maxFilesPerTrigger=1 processes them as three DETERMINISTIC
-    micro-batches (FileStreamSource orders by modification time; the
-    100 s stagger is far above any filesystem timestamp granularity,
-    and the cohort_k path names agree with the mtime order as a
-    tiebreak). Key-disjoint cohorts mean batch b's state delta is
-    exactly cohort b — what makes per-batch state time-travel
-    oracle-expressible."""
-    src = _scratch_join(f"state_cohorts_{tag}")
-    shutil.rmtree(src, ignore_errors=True)
-    os.makedirs(src, exist_ok=True)
+def _run_cohort_batches(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """3-batch stateful run over the events table staged as three
+    key-disjoint cohort files (user_id % 3 == k, in k order): per-user
+    count/sum into a memory sink (update mode). Key-disjoint cohorts
+    mean batch b's state delta is exactly cohort b — what makes
+    per-batch state time-travel oracle-expressible. Returns the run's
+    checkpoint dir."""
     ev = load(spark, sf_dir, "events").select("user_id", "event_type", "value")
-    import time as _time
-
-    now = _time.time()
-    n_staged = 0
-    for k in range(3):
-        d = os.path.join(src, f"cohort_{k}")
-        ev.filter(F.col("user_id") % 3 == k).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        part = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        if len(part) != 1:
-            raise ValueError(f"cohort {k} wrote {len(part)} files")
-        t = now - 300 + 100 * k
-        os.utime(os.path.join(d, part[0]), (t, t))
-        n_staged += spark.read.parquet(d).count()
     # The cohorts must PARTITION the table, or the oracles (which
     # aggregate the full events table) silently diverge: a NULL
     # user_id matches no `% 3 == k` filter, and a negative id's Spark
@@ -2159,44 +2008,23 @@ def _cohort_stream_src(spark: SparkSession, sf_dir: str, tag: str) -> str:
     # `user_id % 3 <= b` still counts it. The testdata has neither
     # today — but its shape has changed between rounds before (the ts
     # encoding), so guard loudly instead of assuming.
-    n_events = ev.count()
+    n_events, n_staged = ev.agg(
+        F.count(F.lit(1)), F.count_if(F.col("user_id") % 3 >= 0)
+    ).first()
     if n_staged != n_events:
         raise ValueError(
             f"cohort split is not a partition of events ({n_staged} "
             f"staged vs {n_events} rows — NULL or negative user_ids?)"
         )
-    return src
-
-
-def _run_cohort_batches(
-    spark: SparkSession, src: str, cp: str, name: str
-) -> None:
-    """3-batch stateful run over the cohort files: per-user count/sum
-    into a memory sink (update mode), one file per trigger."""
-    schema = spark.read.parquet(src + "/cohort_0").schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/cohort_*")
+    sdf = _staged_stream(
+        spark, name, [ev.filter(F.col("user_id") % 3 == k).coalesce(1) for k in range(3)]
     )
     agg = sdf.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         (F.sum(exact.cents(F.col("value"))).cast("double") / 100).alias("total_value"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", cp)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _run_to_table(spark, agg, name, "update")
+    return _scratch_join(f"cp_{name}")
 
 
 @register(
@@ -2236,28 +2064,14 @@ def stream_rocksdb_changelog_checkpoint(
     stream completion). Conf is scoped and restored; the reader needs
     no provider conf (it resolves the format from checkpoint
     metadata — verified: reads green on a vanilla session)."""
-    name = "stream_rocksdb_changelog_checkpoint_run"
-    src = _cohort_stream_src(spark, sf_dir, "clog")
-    cp = _scratch_join(f"cp_{name}")
-    shutil.rmtree(cp, ignore_errors=True)
-    pkey = "spark.sql.streaming.stateStore.providerClass"
     ckey = (
         "spark.sql.streaming.stateStore.rocksdb."
         "changelogCheckpointing.enabled"
     )
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev_p = spark.conf.get(pkey)
-    prev_c = spark.conf.get(ckey, "false")
-    spark.conf.set(pkey, rocks)
-    spark.conf.set(ckey, "true")
-    try:
-        _run_cohort_batches(spark, src, cp, name)
-    finally:
-        spark.conf.set(pkey, prev_p)
-        spark.conf.set(ckey, prev_c)
+    with scoped_conf(spark, {_PROVIDER_KEY: _ROCKSDB_PROVIDER, ckey: "true"}):
+        cp = _run_cohort_batches(
+            spark, sf_dir, "stream_rocksdb_changelog_checkpoint_run"
+        )
     exts: dict[str, int] = {}
     for _root, _dirs, fs in os.walk(os.path.join(cp, "state", "0")):
         for f in fs:
@@ -2316,11 +2130,7 @@ def stream_statestore_time_travel(
     b (change feed) must equal the as-of key-count delta (time
     travel), and every change row below the latest batch must be
     change_type='update' (cohorts never delete)."""
-    name = "stream_statestore_time_travel_run"
-    src = _cohort_stream_src(spark, sf_dir, "tt")
-    cp = _scratch_join(f"cp_{name}")
-    shutil.rmtree(cp, ignore_errors=True)
-    _run_cohort_batches(spark, src, cp, name)
+    cp = _run_cohort_batches(spark, sf_dir, "stream_statestore_time_travel_run")
     per_batch = []
     for b in range(3):
         st = (

@@ -1,12 +1,13 @@
 """Differential tests: every registered query with an oracle is compared
 against DuckDB on the same parquet (the driver's t2 check, run locally
-at sf0.001 for speed). Queries without an oracle get a smoke run."""
+at sf0.001 for speed)."""
 
 from __future__ import annotations
 
 import pytest
 
 from hive_task_spark import registry
+from hive_task_spark.plans.session import apply_runtime_conf
 from tests.compare import assert_frames_match
 
 registry.load_all()
@@ -17,7 +18,11 @@ ROWS_ONLY_NAMES = sorted(set(registry.QUERIES) - set(registry.ORACLES))
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)
 def test_oracle_match(name, spark, oracle_con, sf_dir):
+    # A query may change session conf only for its own run: one that
+    # leaves it changed alters every query after it on a shared session.
+    conf_before = apply_runtime_conf(spark).conf.getAll
     spark_pdf = registry.QUERIES[name](spark, sf_dir).toPandas()
+    assert spark.conf.getAll == conf_before, "query left the session conf changed"
     oracle_pdf = oracle_con.execute(registry.ORACLES[name]).fetchdf()
     assert_frames_match(spark_pdf, oracle_pdf, name)
 

@@ -3100,7 +3100,7 @@ def test_cohort_staging_rejects_non_partitioning_user_ids(spark, tmp_path):
     exact divergence class the guard exists for)."""
     import pytest
 
-    from hive_task_spark.streaming.stream_queries import _cohort_stream_src
+    from hive_task_spark.streaming.stream_queries import _run_cohort_batches
 
     fake_sf = str(tmp_path)
     spark.createDataFrame(
@@ -3114,7 +3114,7 @@ def test_cohort_staging_rejects_non_partitioning_user_ids(spark, tmp_path):
         "overwrite"
     ).parquet(f"{fake_sf}/events.parquet")
     with pytest.raises(ValueError, match="not a partition of events"):
-        _cohort_stream_src(spark, fake_sf, "guard_drill")
+        _run_cohort_batches(spark, fake_sf, "guard_drill")
 
 
 def test_exactly_once_sink_commit_log_and_versions(spark, sf_dir):

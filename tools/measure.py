@@ -6,9 +6,12 @@ Usage:
     python tools/measure.py <tag> --headline
     python tools/measure.py <tag> --all
 
-Named queries and ``--headline`` (bench.HEADLINE): 3 runs per query,
-best kept, and the ``.explain("formatted")`` plan written to the
-git-ignored ``_scratch/plans/<tag>/<name>.txt``. Prints one JSON line
+Named queries and ``--headline`` (bench.HEADLINE): 2 unmeasured runs
+per query to settle it (JIT warm-up keeps a query's first runs in a
+session well above its settled cost; perfbench's ``headline`` workload
+settles 2 passes for the same reason), then 3 timed runs, best kept,
+and the ``.explain("formatted")`` plan written to the git-ignored
+``_scratch/plans/<tag>/<name>.txt``. Prints one JSON line
 ``{"tag", "queries": {name: sec}, "total"}``.
 
 ``--all``: every registered query once (an outlier finder, not a
@@ -30,7 +33,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from hive_task_spark import registry  # noqa: E402
-from hive_task_spark.plans.session import get_session  # noqa: E402
+from hive_task_spark.plans.session import default_parallelism, get_session  # noqa: E402
 
 
 def _run(spark, sf_dir: str, name: str) -> float:
@@ -42,7 +45,7 @@ def _run(spark, sf_dir: str, name: str) -> float:
 def main() -> None:
     tag, names = sys.argv[1], sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    cpus = default_parallelism()
     registry.load_all()
     time_all = names == ["--all"]
     if time_all:
@@ -67,6 +70,8 @@ def main() -> None:
                 out[name] = -1.0
                 print(f"ERROR {name}: {str(exc)[:200]}", file=sys.stderr)
         else:
+            for _ in range(2):
+                _run(spark, sf_dir, name)
             out[name] = round(min(_run(spark, sf_dir, name) for _ in range(3)), 3)
             plan = registry.QUERIES[name](spark, sf_dir)._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")

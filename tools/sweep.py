@@ -39,17 +39,13 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 
 def main() -> int:
     import duckdb
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
+    from hive_task_spark.tables import TABLES
     from tests.compare import assert_frames_match
 
     mode = sys.argv[1] if len(sys.argv) > 1 else "full"
@@ -109,15 +105,7 @@ def main() -> int:
     for i, name in enumerate(names):
         try:
             spdf = qs[name](spark, sf).toPandas()
-            if name in osql:
-                assert_frames_match(
-                    spdf, con.execute(osql[name]).fetchdf(), name
-                )
-            else:
-                # rows-only (no oracle by design): the .toPandas()
-                # collect above IS the check — it fails on any exec
-                # error; assert only that a frame came back.
-                assert spdf is not None
+            assert_frames_match(spdf, con.execute(osql[name]).fetchdf(), name)
         except Exception as e:  # noqa: BLE001
             fails.append((name, str(e)[:300]))
             print(f"FAIL {name}: {str(e)[:300]}", flush=True)
