@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from hive_task_spark.functions import exact
 from hive_task_spark.plans.session import scoped_conf
 from hive_task_spark.registry import register
+from hive_task_spark.scratch import fresh_scratch, scratch_path
 from hive_task_spark.tables import load
 
 
@@ -707,16 +708,9 @@ def sql_ctas_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics, catalog resolution) preserves values end-to-end. The
     same two statements against a metastore are the nightly summary-
     table refresh."""
-    import os as _os
-
-    from hive_task_spark.sources.readers import _scratch
-
     load(spark, sf_dir, "orders").createOrReplaceTempView("ht_orders_ctas_src")
     spark.sql("DROP TABLE IF EXISTS htspark_ctas_summary")
-    path = _scratch("ctas_summary_tbl")
-    import shutil as _shutil
-
-    _shutil.rmtree(path, ignore_errors=True)
+    path = fresh_scratch("ctas_summary_tbl")
     spark.sql(
         f"""
         CREATE TABLE htspark_ctas_summary
@@ -1372,8 +1366,6 @@ def sql_analyze_cbo_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders without scanning, and stale stats — not missing operators —
     are the canonical cause of petabyte-scale plan regressions. The
     stats readback itself is metadata-only."""
-    from hive_task_spark.sources.readers import _scratch
-
     # PID-keyed table name, mirroring scratch_path: catalogs here are
     # per-session in-memory, but if a sweep and pytest ever share a
     # metastore, a fixed name would let one process ANALYZE/DESCRIBE
@@ -1397,7 +1389,7 @@ def sql_analyze_cbo_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cost IS the ANALYZE catalog machinery under test.
     (
         o.write.mode("overwrite")
-        .option("path", _scratch("cbo_stats_tbl"))
+        .option("path", scratch_path("cbo_stats_tbl"))
         .saveAsTable(tbl)
     )
     # explicit NDV accuracy knob (the r11 policy): default 0.05 reads

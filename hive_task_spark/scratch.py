@@ -112,3 +112,13 @@ def scratch_root() -> str:
 def scratch_path(name: str) -> str:
     """A named path under this process's private scratch root."""
     return os.path.join(scratch_root(), name)
+
+
+def fresh_scratch(name: str) -> str:
+    """``scratch_path(name)``, emptied and created: the one reset for a
+    query that rebuilds its dataset or checkpoint from nothing. A
+    leftover the reset could not remove fails here, not in a read."""
+    path = scratch_path(name)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path

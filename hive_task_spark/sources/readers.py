@@ -34,9 +34,7 @@ from hive_task_spark.registry import register
 from hive_task_spark.functions.exact import cents as _cents
 from hive_task_spark.tables import load
 
-from hive_task_spark.scratch import scratch_path as _scratch  # noqa: E402
-# (per-process root — see hive_task_spark/scratch.py for the r6
-# harness-race rationale; tests import _scratch from here unchanged)
+from hive_task_spark.scratch import fresh_scratch, scratch_path
 
 
 _NATION_SCHEMA = T.StructType(
@@ -69,7 +67,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle never sees the CSV, so any quoting/typing loss fails the
     value-hash."""
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    path = _scratch("nation_csv")
+    path = scratch_path("nation_csv")
     n.write.mode("overwrite").option("header", "true").csv(path)
     return spark.read.schema(_NATION_SCHEMA).option("header", "true").csv(path)
 
@@ -84,7 +82,7 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
     )
-    path = _scratch("customer_json")
+    path = scratch_path("customer_json")
     c.write.mode("overwrite").json(path)
     return spark.read.schema(_CUSTOMER_SCHEMA).json(path)
 
@@ -108,7 +106,7 @@ def source_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     the filter is satisfied by directory pruning (PartitionFilters in
     the scan node), the 100 TB pattern for time-partitioned facts."""
     o = load(spark, sf_dir, "orders")
-    path = _scratch("orders_by_year")
+    path = scratch_path("orders_by_year")
     (
         o.withColumn("o_year", F.year("o_orderdate"))
         .write.mode("overwrite")
@@ -145,12 +143,12 @@ def source_catalog_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load(spark, sf_dir, "region")
     (
         n.write.mode("overwrite")
-        .option("path", _scratch("nation_tbl"))
+        .option("path", scratch_path("nation_tbl"))
         .saveAsTable("htspark_nation")
     )
     (
         r.write.mode("overwrite")
-        .option("path", _scratch("region_tbl"))
+        .option("path", scratch_path("region_tbl"))
         .saveAsTable("htspark_region")
     )
     nt = spark.table("htspark_nation")
@@ -180,7 +178,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     original parquet — value-identical iff the round-trip is
     lossless (longs, doubles, strings all are)."""
     c = load(spark, sf_dir, "customer")
-    path = _scratch("customer_orc")
+    path = scratch_path("customer_orc")
     c.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return back.groupBy("c_mktsegment").agg(
@@ -219,15 +217,12 @@ def source_json_permissive_corrupt(spark: SparkSession, sf_dir: str) -> DataFram
         .otherwise(F.to_json(F.struct("n_nationkey", "n_name", "n_regionkey")))
         .alias("value")
     )
-    path = _scratch("nation_corrupt_json")
+    path = scratch_path("nation_corrupt_json")
     lines.write.mode("overwrite").text(path)
+    # a new StructType, not _NATION_SCHEMA.add(...): add() mutates the
+    # shared constant in place
     schema = T.StructType(
-        [
-            T.StructField("n_nationkey", T.IntegerType()),
-            T.StructField("n_name", T.StringType()),
-            T.StructField("n_regionkey", T.IntegerType()),
-            T.StructField("_corrupt", T.StringType()),
-        ]
+        _NATION_SCHEMA.fields + [T.StructField("_corrupt", T.StringType())]
     )
     back = (
         spark.read.schema(schema)
@@ -277,7 +272,7 @@ def source_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .bucketBy(8, "o_custkey")
         .sortBy("o_custkey")
-        .option("path", _scratch("orders_bucketed"))
+        .option("path", scratch_path("orders_bucketed"))
         .saveAsTable("ht_orders_b")
     )
     (
@@ -285,7 +280,7 @@ def source_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .bucketBy(8, "c_custkey")
         .sortBy("c_custkey")
-        .option("path", _scratch("customer_bucketed"))
+        .option("path", scratch_path("customer_bucketed"))
         .saveAsTable("ht_customer_b")
     )
     ob = spark.table("ht_orders_b")
@@ -323,7 +318,7 @@ def source_join_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     the predicate. Plan-asserted in tests/test_plans.py; the oracle
     states the post-pruning semantics as a plain filter."""
     o = load(spark, sf_dir, "orders")
-    path = _scratch("orders_dpp_by_year")
+    path = scratch_path("orders_dpp_by_year")
     (
         o.withColumn("o_year", F.year("o_orderdate").cast("long"))
         .write.mode("overwrite")
@@ -556,8 +551,7 @@ def source_ignore_corrupt_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     the intact table: the read must surface every good row and
     nothing else."""
     n = load(spark, sf_dir, "nation")
-    path = _scratch("nation_with_corrupt")
-    shutil.rmtree(path, ignore_errors=True)
+    path = fresh_scratch("nation_with_corrupt")
     n.coalesce(1).write.mode("overwrite").parquet(path)
     with open(os.path.join(path, "part-corrupt.parquet"), "wb") as fh:
         fh.write(b"PAR1 this is not really a parquet file \x00\x01\x02")
@@ -617,7 +611,7 @@ def source_parquet_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
     the engine must prove values survive the round-trip bit-exactly,
     which the intact-table oracle checks."""
     li = load(spark, sf_dir, "lineitem")
-    path = _scratch("lineitem_zstd")
+    path = scratch_path("lineitem_zstd")
     li.write.mode("overwrite").option("compression", "zstd").parquet(path)
     return (
         spark.read.parquet(path)
@@ -648,8 +642,8 @@ def source_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     two statements are the nightly compaction job (or the table
     format's OPTIMIZE)."""
     o = load(spark, sf_dir, "orders")
-    frag = _scratch("orders_fragmented")
-    compact = _scratch("orders_compacted")
+    frag = scratch_path("orders_fragmented")
+    compact = scratch_path("orders_compacted")
     o.repartition(64).write.mode("overwrite").parquet(frag)
     spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(
         compact
@@ -687,11 +681,7 @@ def source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     `spark.sql.files.maxPartitionBytes` so many small blobs coalesce
     into few tasks (see multimodal.py for the downstream decode
     kernels)."""
-    import shutil
-
-    d = _scratch("bin_docs")
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
+    d = fresh_scratch("bin_docs")
 
     def _write_blobs(rows) -> None:
         # Executor-side blob writer (local[_] shares the scratch FS;
@@ -741,8 +731,7 @@ def source_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> Data
     replaced, value-exactly. The mode is the one write's option, so the
     session conf is never touched (queries must not depend on session
     conf — CLAUDE.md)."""
-    path = _scratch("orders_dpo")
-    shutil.rmtree(path, ignore_errors=True)
+    path = fresh_scratch("orders_dpo")
     o = load(spark, sf_dir, "orders")
     o.write.partitionBy("o_orderstatus").mode("overwrite").parquet(path)
 
@@ -799,10 +788,7 @@ def source_parquet_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     place is cheap; pin mergeSchema off for stable-schema scans to
     skip the footer sweep."""
     c = load(spark, sf_dir, "customer")
-    base = _scratch("schema_merge_ds")
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
+    base = fresh_scratch("schema_merge_ds")
     c.filter(F.col("c_custkey") % 2 == 0).select("c_custkey", "c_acctbal").write.mode(
         "overwrite"
     ).parquet(os.path.join(base, "drop=v1"))
@@ -836,7 +822,7 @@ def source_write_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     append is THE idempotency decision in nightly loads; the
     dynamic-partition variant is `source_dynamic_partition_overwrite`."""
     n = load(spark, sf_dir, "nation").select("n_nationkey")
-    path = _scratch("write_modes_nation")
+    path = scratch_path("write_modes_nation")
     n.write.mode("overwrite").parquet(path)
     n.write.mode("append").parquet(path)
     back = spark.read.parquet(path)
@@ -845,60 +831,49 @@ def source_write_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stage(base: str, files: dict[str, DataFrame]) -> None:
+    """Write each frame as one immutable single-file data dir under
+    `base`, named by its key: staged, not yet live until a commit adds
+    it."""
+    for name, df in files.items():
+        df.coalesce(1).write.mode("overwrite").parquet(os.path.join(base, name))
+
+
+def _read_snapshot(
+    spark: SparkSession, base: str, as_of: int | None = None
+) -> DataFrame:
+    """Read the table AS OF version `as_of` (latest when None): resolve
+    the live files from the log, then one multi-path parquet scan of
+    just those files — snapshot resolution costs O(log), not O(data)."""
+    return spark.read.parquet(
+        *[os.path.join(base, f) for f in _occ_live_files(base, as_of)]
+    )
+
+
 def _write_commit_log(spark: SparkSession, sf_dir: str) -> str:
-    """Build a 3-version Delta-style dataset in _scratch: v1 adds
-    files A+B, v2 adds C, v3 removes B. The log is JSON lines of
-    {version, action, file}; readers reconstruct any version's live
-    file set from the log alone — data files are immutable."""
-    import json
-
-    base = _scratch("commit_log_ds")
-    import shutil
-
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
+    """Build a 3-version Delta-style table: v1 adds files A+B, v2 adds
+    C, v3 removes B. Readers reconstruct any version's live file set
+    from the log alone — data files are immutable."""
+    base = fresh_scratch("commit_log_ds")
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    parts = {
-        "A": n.filter(F.col("n_nationkey") < 10),
-        "B": n.filter((F.col("n_nationkey") >= 10) & (F.col("n_nationkey") < 20)),
-        "C": n.filter(F.col("n_nationkey") >= 20),
-    }
-    for name, df in parts.items():
-        df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(base, f"file_{name}")
-        )
-    log = [
-        {"version": 1, "action": "add", "file": "file_A"},
-        {"version": 1, "action": "add", "file": "file_B"},
-        {"version": 2, "action": "add", "file": "file_C"},
-        {"version": 3, "action": "remove", "file": "file_B"},
-    ]
-    with open(os.path.join(base, "_log.json"), "w") as fh:
-        for entry in log:
-            fh.write(json.dumps(entry) + "\n")
+    _stage(
+        base,
+        {
+            "file_A": n.filter(F.col("n_nationkey") < 10),
+            "file_B": n.filter(
+                (F.col("n_nationkey") >= 10) & (F.col("n_nationkey") < 20)
+            ),
+            "file_C": n.filter(F.col("n_nationkey") >= 20),
+        },
+    )
+    occ_commit(
+        base,
+        0,
+        [{"action": "add", "file": "file_A"}, {"action": "add", "file": "file_B"}],
+    )
+    occ_commit(base, 1, [{"action": "add", "file": "file_C"}])
+    occ_commit(base, 2, [{"action": "remove", "file": "file_B"}])
     return base
-
-
-def _read_snapshot(spark: SparkSession, base: str, version: int) -> DataFrame:
-    """Replay the commit log up to `version` and read the live files.
-    The log is tiny driver-side metadata (exactly like a Delta/Iceberg
-    snapshot resolution); the DATA read is a plain multi-path parquet
-    scan of the surviving files — at 100 TB snapshot resolution cost
-    is O(log), not O(data)."""
-    import json
-
-    live: set[str] = set()
-    with open(os.path.join(base, "_log.json")) as fh:
-        for line in fh:
-            e = json.loads(line)
-            if e["version"] > version:
-                continue
-            if e["action"] == "add":
-                live.add(e["file"])
-            else:
-                live.discard(e["file"])
-    paths = [os.path.join(base, f) for f in sorted(live)]
-    return spark.read.parquet(*paths)
 
 
 @register(
@@ -912,13 +887,13 @@ def _read_snapshot(spark: SparkSession, base: str, version: int) -> DataFrame:
 )
 def source_commit_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lakehouse transaction-log replay, latest snapshot: immutable
-    parquet files + a JSON action log (add/remove per version) — the
-    Delta/Iceberg mechanic reduced to its essence. Version 3 removed
-    file B, so the live set is A+C and the scan never opens B (file
-    skipping by metadata, not data reads). The oracle states the
+    parquet files + one JSON commit file of add/remove actions per
+    version — the Delta/Iceberg mechanic reduced to its essence.
+    Version 3 removed file B, so the live set is A+C and the scan never
+    opens B (file skipping by metadata, not data reads). The oracle states the
     surviving key ranges directly."""
     base = _write_commit_log(spark, sf_dir)
-    snap = _read_snapshot(spark, base, version=3)
+    snap = _read_snapshot(spark, base)
     return snap.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.min("n_nationkey").cast("long").alias("min_key"),
@@ -946,7 +921,7 @@ def source_commit_log_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame
     base = _write_commit_log(spark, sf_dir)
     out = None
     for v in (1, 2, 3):
-        row = _read_snapshot(spark, base, v).agg(
+        row = _read_snapshot(spark, base, as_of=v).agg(
             F.count(F.lit(1)).cast("long").alias("n_rows")
         ).select(F.lit(v).cast("long").alias("version"), "n_rows")
         out = row if out is None else out.unionByName(row)
@@ -982,22 +957,40 @@ def _occ_actions(base: str, version: int) -> list[dict]:
         return [json.loads(line) for line in fh if line.strip()]
 
 
-def _occ_live_files(base: str, as_of: int | None = None) -> list[str]:
-    """Replay per-version commit files up to `as_of` (latest when
-    None). O(log) driver-side metadata, exactly like `_read_snapshot`
-    — but over a MULTI-WRITER log where each version is its own
+def _occ_replay(base: str):
+    """The one replay of the log: yield (version, live file set) after
+    each committed version, oldest first. Each version is its own
     atomically-published file (the Delta `_delta_log/0000N.json`
-    mechanic), not one writer-owned JSON-lines file."""
+    mechanic), so the replay is O(log) driver-side metadata, never a
+    data read."""
     live: set[str] = set()
     for v in _occ_versions(base):
-        if as_of is not None and v > as_of:
-            break
         for a in _occ_actions(base, v):
             if a["action"] == "add":
                 live.add(a["file"])
             else:
                 live.discard(a["file"])
-    return sorted(live)
+        yield v, frozenset(live)
+
+
+def _occ_live_files(base: str, as_of: int | None = None) -> list[str]:
+    """The live file set AS OF version `as_of` (latest when None)."""
+    files: frozenset[str] = frozenset()
+    for v, live in _occ_replay(base):
+        if as_of is not None and v > as_of:
+            break
+        files = live
+    return sorted(files)
+
+
+def _occ_reachable(base: str, retain_from: int) -> set[str]:
+    """Files some snapshot at version >= retain_from still references:
+    the union of the retained versions' live sets, in one replay."""
+    reachable: set[str] = set()
+    for v, live in _occ_replay(base):
+        if v >= retain_from:
+            reachable |= live
+    return reachable
 
 
 def occ_commit(base: str, read_version: int, actions: list[dict]) -> tuple[int, int]:
@@ -1107,26 +1100,21 @@ def source_commit_log_optimistic_concurrency(
     property that lets hundreds of concurrent ETL writers share one
     petabyte table — data-file I/O stays embarrassingly parallel and
     only the tiny version-claim serializes."""
-    import shutil
-
-    base = _scratch("commit_log_occ")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
+    base = fresh_scratch("commit_log_occ")
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    staged = {
-        "file_A": n.filter(F.col("n_nationkey") < 10),
-        "file_D": n.filter(
-            (F.col("n_nationkey") >= 10) & (F.col("n_nationkey") < 20)
-        ),
-        "file_E": n.filter(F.col("n_nationkey") >= 20),
-        # both compactions rewrite file_A's rows under their own name
-        "file_A_c1": n.filter(F.col("n_nationkey") < 10),
-        "file_A_c2": n.filter(F.col("n_nationkey") < 10),
-    }
-    for name, df in staged.items():
-        df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(base, name)
-        )
+    _stage(
+        base,
+        {
+            "file_A": n.filter(F.col("n_nationkey") < 10),
+            "file_D": n.filter(
+                (F.col("n_nationkey") >= 10) & (F.col("n_nationkey") < 20)
+            ),
+            "file_E": n.filter(F.col("n_nationkey") >= 20),
+            # both compactions rewrite file_A's rows under their own name
+            "file_A_c1": n.filter(F.col("n_nationkey") < 10),
+            "file_A_c2": n.filter(F.col("n_nationkey") < 10),
+        },
+    )
     v, r = occ_commit(base, 0, [{"action": "add", "file": "file_A"}])
     if (v, r) != (1, 0):
         raise ValueError(f"base commit landed at v{v} with {r} rebases")
@@ -1167,13 +1155,13 @@ def source_commit_log_optimistic_concurrency(
         raise ValueError("loser's staged file became live")
     out = None
     for ver in (1, 2, 3, 4):
-        files = _occ_live_files(base, as_of=ver)
+        n_files = len(_occ_live_files(base, as_of=ver))
         row = (
-            spark.read.parquet(*[os.path.join(base, f) for f in files])
+            _read_snapshot(spark, base, as_of=ver)
             .agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
             .select(
                 F.lit(ver).cast("long").alias("version"),
-                F.lit(len(files)).cast("long").alias("n_files"),
+                F.lit(n_files).cast("long").alias("n_files"),
                 "n_rows",
             )
         )
@@ -1198,10 +1186,7 @@ def source_csv_dropmalformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     is how you ingest dirty third-party feeds without a quarantine
     pass; pair with a PERMISSIVE side-channel when you need the
     rejects."""
-    import shutil
-
-    base = _scratch("nation_malformed_csv")
-    shutil.rmtree(base, ignore_errors=True)
+    base = fresh_scratch("nation_malformed_csv")
     load(spark, sf_dir, "nation").select("n_nationkey", "n_name").coalesce(
         1
     ).write.mode("overwrite").csv(base)
@@ -1332,7 +1317,7 @@ def source_csv_quoted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("tricky"),
         "r_name",
     )
-    path = _scratch("region_csv_quoted")
+    path = scratch_path("region_csv_quoted")
     (
         r.write.mode("overwrite")
         .option("header", "true")
@@ -1389,7 +1374,7 @@ def source_parquet_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     neither pyarrow 16 nor DuckDB 1.0 expose the footer's
     bloom_filter_offset, so the size delta is the observable)."""
     li = load(spark, sf_dir, "lineitem")
-    path = _scratch("lineitem_bloom")
+    path = scratch_path("lineitem_bloom")
     # NOTE: the per-column `parquet.bloom.filter.enabled#col` writer
     # option is silently ignored by this Spark/parquet-mr 1.16 write
     # path (probed: file size identical to a no-bloom write); the
@@ -1431,7 +1416,7 @@ def _rowgroup_stats_batches(it):
 
     pdf = pd.concat(list(it), ignore_index=True)
     pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-    path = _scratch("rowgroup_stats_demo.parquet")
+    path = scratch_path("rowgroup_stats_demo.parquet")
     pq.write_table(
         pa.Table.from_pandas(pdf, preserve_index=False),
         path,
@@ -1533,17 +1518,10 @@ def source_csv_multichar_delimiter(spark: SparkSession, sf_dir: str) -> DataFram
     n = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    path = _scratch("nation_csv_multichar")
+    path = scratch_path("nation_csv_multichar")
     n.write.mode("overwrite").option("sep", "||").option("header", "true").csv(path)
-    schema = T.StructType(
-        [
-            T.StructField("n_nationkey", T.IntegerType()),
-            T.StructField("n_name", T.StringType()),
-            T.StructField("n_regionkey", T.IntegerType()),
-        ]
-    )
     back = (
-        spark.read.schema(schema)
+        spark.read.schema(_NATION_SCHEMA)
         .option("sep", "||")
         .option("header", "true")
         .csv(path)
@@ -1589,17 +1567,10 @@ def source_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("value")
     )
-    path = _scratch("nation_json_multiline")
+    path = scratch_path("nation_json_multiline")
     payload.coalesce(1).write.mode("overwrite").text(path)
-    schema = T.StructType(
-        [
-            T.StructField("n_nationkey", T.IntegerType()),
-            T.StructField("n_name", T.StringType()),
-            T.StructField("n_regionkey", T.IntegerType()),
-        ]
-    )
     return (
-        spark.read.schema(schema)
+        spark.read.schema(_NATION_SCHEMA)
         .option("multiLine", "true")
         .json(path)
         .orderBy("n_nationkey")
@@ -1653,7 +1624,7 @@ def source_csv_comment_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("# block starting at nation "), F.col("n_nationkey"))
         .alias("value"),
     )
-    path = _scratch("nation_csv_comment")
+    path = scratch_path("nation_csv_comment")
     (
         data_lines.unionByName(comment_lines)
         .coalesce(1)
@@ -1858,9 +1829,7 @@ def source_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFra
         "n_nationkey", "n_name", "n_regionkey"
     )
     spark.dataSource.register(_JsonLinesSink)
-    path = _scratch("nation_pysink")
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
+    path = fresh_scratch("nation_pysink")
     n.repartition(4).write.format("pyjsonlsink").option("path", path).mode(
         "append"
     ).save()
@@ -1948,9 +1917,7 @@ def source_python_datasource_arrow_writer(
         "n_nationkey", "n_name", "n_regionkey"
     )
     spark.dataSource.register(_ArrowParquetSink)
-    path = _scratch("nation_pyarrowsink")
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
+    path = fresh_scratch("nation_pyarrowsink")
     n.repartition(4).write.format("pyarrowparquetsink").option(
         "path", path
     ).mode("append").save()
@@ -2004,7 +1971,7 @@ def source_file_metadata_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass (input_file_name is the legacy, non-pruning variant). The
     plan is one pruned scan + one keyed exchange."""
     o = load(spark, sf_dir, "orders")
-    path = _scratch("orders_meta_parts")
+    path = scratch_path("orders_meta_parts")
     (
         o.select("o_orderkey", "o_totalprice", "o_orderpriority")
         .repartition("o_orderpriority")
@@ -2049,11 +2016,7 @@ def _write_commit_log_with_stats(spark: SparkSession, sf_dir: str) -> str:
     LAYOUT property — stats on a randomly-scattered column prune
     nothing, which is why real tables Z-ORDER/sort before relying on
     it)."""
-    import json
-
-    base = _scratch("commit_log_skip")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
+    base = fresh_scratch("commit_log_skip")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     banded = o.withColumn(
         "band",
@@ -2089,9 +2052,7 @@ def _write_commit_log_with_stats(spark: SparkSession, sf_dir: str) -> str:
         }
         for r in sorted(stats, key=lambda r: r.band)
     ]
-    with open(_occ_commit_path(base, 1), "w") as fh:
-        for a in actions:
-            fh.write(json.dumps(a) + "\n")
+    occ_commit(base, 0, actions)
     return base
 
 
@@ -2227,21 +2188,7 @@ def occ_vacuum(base: str, retain_from: int) -> list[str]:
     versions = _occ_versions(base)
     if not versions:
         return []
-    retain_from = min(retain_from, versions[-1])
-    # one forward replay of the log, maintaining the live set and
-    # unioning it into `reachable` at every retained version — O(V)
-    # action parses, not O(V^2) (an _occ_live_files call per retained
-    # version would re-replay the whole prefix each time)
-    reachable: set[str] = set()
-    live: set[str] = set()
-    for v in versions:
-        for a in _occ_actions(base, v):
-            if a["action"] == "add":
-                live.add(a["file"])
-            else:
-                live.discard(a["file"])
-        if v >= retain_from:
-            reachable |= live
+    reachable = _occ_reachable(base, min(retain_from, versions[-1]))
     deleted = []
     for entry in sorted(os.listdir(base)):
         p = os.path.join(base, entry)
@@ -2292,20 +2239,17 @@ def source_commit_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     The value edge is the per-phase audit (files on disk, reachable
     files, live row count); the oracle states all three phases from
     the nation table directly."""
-    base = _scratch("commit_log_vacuum")
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
+    base = fresh_scratch("commit_log_vacuum")
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    staged = {
-        "file_A": n.filter(F.col("n_nationkey") < 10),
-        "file_B": n.filter(F.col("n_nationkey") >= 10),
-        "file_B_c": n.filter(F.col("n_nationkey") >= 10),
-        "file_orphan": n.filter(F.col("n_nationkey") >= 10),
-    }
-    for name, df in staged.items():
-        df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(base, name)
-        )
+    _stage(
+        base,
+        {
+            "file_A": n.filter(F.col("n_nationkey") < 10),
+            "file_B": n.filter(F.col("n_nationkey") >= 10),
+            "file_B_c": n.filter(F.col("n_nationkey") >= 10),
+            "file_orphan": n.filter(F.col("n_nationkey") >= 10),
+        },
+    )
     occ_commit(
         base,
         0,
@@ -2332,36 +2276,25 @@ def source_commit_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not e.startswith("_") and os.path.isdir(os.path.join(base, e))
         )
 
-    def _reachable(retain_from: int) -> int:
-        seen: set[str] = set()
-        for v in _occ_versions(base):
-            if v >= retain_from:
-                seen.update(_occ_live_files(base, as_of=v))
-        return len(seen)
-
-    def _latest_rows() -> int:
-        files = _occ_live_files(base)
+    def _audit(phase: int, retain_from: int) -> tuple[int, int, int, int]:
         return (
-            spark.read.parquet(*[os.path.join(base, f) for f in files])
-            .count()
+            phase,
+            _on_disk(),
+            len(_occ_reachable(base, retain_from)),
+            _read_snapshot(spark, base).count(),
         )
 
-    audit = [(0, _on_disk(), _reachable(1), _latest_rows())]
+    audit = [_audit(0, 1)]
     gone = occ_vacuum(base, retain_from=1)
     if gone != ["file_orphan"]:
         raise ValueError(f"retain-v1 vacuum deleted {gone}, not the orphan")
-    audit.append((1, _on_disk(), _reachable(1), _latest_rows()))
+    audit.append(_audit(1, 1))
     gone = occ_vacuum(base, retain_from=2)
     if gone != ["file_B"]:
         raise ValueError(f"retain-v2 vacuum deleted {gone}, not file_B")
-    audit.append((2, _on_disk(), _reachable(2), _latest_rows()))
+    audit.append(_audit(2, 2))
     try:
-        stale = spark.read.parquet(
-            *[
-                os.path.join(base, f)
-                for f in _occ_live_files(base, as_of=1)
-            ]
-        )
+        stale = _read_snapshot(spark, base, as_of=1)
         # Force ANALYSIS first so the missing-path error surfaces
         # before any job is scheduled; count() only runs if analysis
         # unexpectedly succeeds, feeding the else branch below.

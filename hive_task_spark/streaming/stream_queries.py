@@ -19,7 +19,6 @@ demonstrated (and oracle-checked) in `stream_tumbling_append`.
 from __future__ import annotations
 
 import os
-import shutil
 import time
 
 import pandas as pd
@@ -39,16 +38,9 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from hive_task_spark.functions import exact
 from hive_task_spark.plans.session import apply_runtime_conf, scoped_conf
 from hive_task_spark.registry import register
+from hive_task_spark.scratch import fresh_scratch, scratch_path
 from hive_task_spark.tables import load, normalize_events_ts, parquet_schema
 
-# Per-process scratch root (hive_task_spark/scratch.py): checkpoint
-# dirs and file-source staging are PID-keyed so a sweep and pytest can
-# overlap without racing the same state store (VERDICT r6 item 4).
-from hive_task_spark.scratch import scratch_root as _scratch_root  # noqa: E402
-
-
-def _scratch_join(*parts: str) -> str:
-    return os.path.join(_scratch_root(), *parts)
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet (file source; explicit schema
@@ -66,13 +58,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
     )
     return normalize_events_ts(raw)
-
-
-def _fresh_cp(name: str) -> str:
-    """An empty checkpoint dir, so the file source re-reads its input."""
-    cp = _scratch_join(f"cp_{name}")
-    shutil.rmtree(cp, ignore_errors=True)
-    return cp
 
 
 def _drain(writer: DataStreamWriter, cp: str) -> StreamingQuery:
@@ -102,7 +87,7 @@ def _run_to_table(
     `cp_<name>`; return the materialized batch DataFrame."""
     _drain(
         sdf.writeStream.format("memory").queryName(name).outputMode(output_mode),
-        _fresh_cp(name),
+        fresh_scratch(f"cp_{name}"),
     )
     return spark.table(name)
 
@@ -118,8 +103,7 @@ def _staged_stream(
     filesystem timestamp granularity). A batch written as n files
     replays as n micro-batches. The schema is the batches' own, so no
     footer-read job runs."""
-    src = _scratch_join(f"staged_{tag}")
-    shutil.rmtree(src, ignore_errors=True)
+    src = fresh_scratch(f"staged_{tag}")
     files: list[str] = []
     for b in batches:
         b.write.mode("append").parquet(src)
@@ -374,14 +358,13 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated, oracle-checked against the source). This is how
     streams feed non-streaming stores (JDBC, Delta-less parquet,
     external services)."""
-    out_dir = _scratch_join("stream_fb_parquet")
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = fresh_scratch("stream_fb_parquet")
     s = _events_stream(spark, sf_dir).select("event_id", "event_type", "value")
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    _drain(s.writeStream.foreachBatch(_sink), _fresh_cp("stream_fb"))
+    _drain(s.writeStream.foreachBatch(_sink), fresh_scratch("cp_stream_fb"))
     back = spark.read.parquet(out_dir)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"), (F.sum(exact.cents(F.col("value"))).cast("double") / 100).alias("total_value")
@@ -641,14 +624,13 @@ def stream_file_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     dupes, no loss) across the replay. On a cluster the same code
     writes to object storage and downstream jobs read the manifest,
     never partial files."""
-    out_dir = _scratch_join("file_sink_out")
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = fresh_scratch("file_sink_out")
     s = _events_stream(spark, sf_dir).filter(F.col("value") > 10.0).select(
         "event_id", "event_type", "value"
     )
     _drain(
         s.writeStream.format("parquet").option("path", out_dir).outputMode("append"),
-        _fresh_cp("file_sink"),
+        fresh_scratch("cp_file_sink"),
     )
     return (
         spark.read.parquet(out_dir)
@@ -687,7 +669,7 @@ def stream_statestore_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"), (F.sum(exact.cents(F.col("value"))).cast("double") / 100).alias("total_value")
     )
     _run_to_table(spark, agg, name, "update")
-    state = spark.read.format("statestore").load(_scratch_join(f"cp_{name}"))
+    state = spark.read.format("statestore").load(scratch_path(f"cp_{name}"))
     # key = (user_id); value = the agg buffer (count, sum) in
     # declaration order — flatten positionally, then re-alias. The
     # sum buffer holds exact BIGINT cents since r18 (order-independent
@@ -883,9 +865,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     is why real systems keep state in an indexed table format and
     merge-on-read instead of rewriting (same join shape either
     way)."""
-    state_root = _scratch_join("upsert_state")
-    shutil.rmtree(state_root, ignore_errors=True)
-    os.makedirs(state_root)
+    state_root = fresh_scratch("upsert_state")
     e = load(spark, sf_dir, "events")
     s = _staged_stream(spark, "upsert", [e.repartition(4)])
     versions = []
@@ -930,7 +910,10 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         versions.append(v)
 
-    _drain(s.writeStream.foreachBatch(merge_batch), _fresh_cp("stream_upsert_sink"))
+    _drain(
+        s.writeStream.foreachBatch(merge_batch),
+        fresh_scratch("cp_stream_upsert_sink"),
+    )
     final = spark.read.parquet(os.path.join(state_root, f"v{versions[-1]}"))
     return final.select(
         "user_id",
@@ -1049,7 +1032,7 @@ def stream_observe_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = "observe_progress_sink"
     q = _drain(
         sdf.writeStream.format("memory").queryName(name).outputMode("append"),
-        _fresh_cp(name),
+        fresh_scratch(f"cp_{name}"),
     )
     n_events, total, mn, mx = 0, 0.0, None, None
     for p in q.recentProgress:
@@ -1552,9 +1535,7 @@ def stream_python_datasource_sink(
 
     spark.dataSource.register(_TickStreamSource)
     spark.dataSource.register(_JsonLinesStreamSink)
-    out = _scratch_join("pystreamsink_out")
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out)
+    out = fresh_scratch("pystreamsink_out")
     raw = (
         spark.readStream.format("tickstream")
         .option("rows", "1000")
@@ -1563,7 +1544,7 @@ def stream_python_datasource_sink(
     )
     _drain(
         raw.writeStream.format("pyjsonlstreamsink").option("path", out),
-        _fresh_cp("stream_python_datasource_sink"),
+        fresh_scratch("cp_stream_python_datasource_sink"),
     )
     with open(os.path.join(out, "_COMMITLOG")) as fh:
         logged = sum(_json.loads(line)["rows"] for line in fh)
@@ -1652,7 +1633,7 @@ def stream_state_metadata_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _run_to_table(spark, agg, "stream_state_metadata_src", "complete")
     md = spark.read.format("state-metadata").load(
-        _scratch_join("cp_stream_state_metadata_src")
+        scratch_path("cp_stream_state_metadata_src")
     )
     return md.select(
         F.col("operatorId").alias("operator_id"),
@@ -1871,8 +1852,7 @@ def stream_foreachbatch_exactly_once(
     version rewrite here is the harness-sized stand-in. The replay
     orchestration (3 throttled micro-batches + a restart probe) is
     test harness, not production shape."""
-    state_root = _scratch_join("eo_state")
-    shutil.rmtree(state_root, ignore_errors=True)
+    state_root = fresh_scratch("eo_state")
     commit_dir = os.path.join(state_root, "committed")
     os.makedirs(commit_dir)
 
@@ -1953,7 +1933,7 @@ def stream_foreachbatch_exactly_once(
 
     # the per-batch merge is a small keyed aggregate (|users| rows), so
     # _drain's 8-partition pin suits it too
-    cp = _fresh_cp("stream_foreachbatch_exactly_once")
+    cp = fresh_scratch("cp_stream_foreachbatch_exactly_once")
     _drain(s.writeStream.foreachBatch(merge_batch), cp)
     n_committed = _latest_committed()
     n_markers = len(
@@ -2024,7 +2004,7 @@ def _run_cohort_batches(spark: SparkSession, sf_dir: str, name: str) -> str:
         (F.sum(exact.cents(F.col("value"))).cast("double") / 100).alias("total_value"),
     )
     _run_to_table(spark, agg, name, "update")
-    return _scratch_join(f"cp_{name}")
+    return scratch_path(f"cp_{name}")
 
 
 @register(
@@ -2245,7 +2225,7 @@ def stream_statestore_join_state_reader(
         "user_id", "event_id", "event_r"
     )
     out = _run_to_table(spark, j, name, "append")
-    cp = _scratch_join(f"cp_{name}")
+    cp = scratch_path(f"cp_{name}")
 
     def _state(side: str) -> DataFrame:
         st = (

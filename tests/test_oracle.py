@@ -13,7 +13,6 @@ from tests.compare import assert_frames_match
 registry.load_all()
 
 ORACLE_NAMES = sorted(registry.ORACLES)
-ROWS_ONLY_NAMES = sorted(set(registry.QUERIES) - set(registry.ORACLES))
 
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)
@@ -28,9 +27,13 @@ def test_oracle_match(name, spark, oracle_con, sf_dir):
 
 
 def test_every_query_is_oracle_backed():
-    """r18 closed the last rows-only gap (hash_engine_specific grew a
-    literal-boolean property oracle), so the registry carries ZERO
-    oracle-less queries — pin that: a new rows-only registration must
-    argue its way past this test, not silently weaken the driver's
-    check to rows-only (the r16 red was exactly an unconfirmable op)."""
-    assert ROWS_ONLY_NAMES == [], ROWS_ONLY_NAMES
+    """Every registered query carries a non-empty SQL oracle and every
+    oracle belongs to a registered query: a rows-only query would
+    weaken the driver's value check to a row check."""
+    assert set(registry.QUERIES) == set(registry.ORACLES)
+    bad = sorted(
+        name
+        for name, sql in registry.ORACLES.items()
+        if not isinstance(sql, str) or not sql.strip()
+    )
+    assert bad == [], bad

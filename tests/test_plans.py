@@ -299,10 +299,10 @@ def test_compaction_reduces_file_count(spark, sf_dir):
     import os
 
     registry.QUERIES["source_compact_small_files"](spark, sf_dir).count()
-    from hive_task_spark.sources.readers import _scratch
+    from hive_task_spark.scratch import scratch_path
 
-    n_frag = len([f for f in os.listdir(_scratch("orders_fragmented")) if f.endswith(".parquet")])
-    n_comp = len([f for f in os.listdir(_scratch("orders_compacted")) if f.endswith(".parquet")])
+    n_frag = len([f for f in os.listdir(scratch_path("orders_fragmented")) if f.endswith(".parquet")])
+    n_comp = len([f for f in os.listdir(scratch_path("orders_compacted")) if f.endswith(".parquet")])
     assert n_frag == 64 and n_comp == 4, (n_frag, n_comp)
 
 
@@ -435,14 +435,14 @@ def test_parquet_bloom_filter_lands_on_disk(spark, sf_dir):
     observable — an option typo would make the two writes equal.)"""
     import os
 
-    from hive_task_spark.sources.readers import _scratch
+    from hive_task_spark.scratch import scratch_path
     from hive_task_spark.tables import load as _load
 
     # run the registered query (writes _scratch/lineitem_bloom)
     registry.QUERIES["source_parquet_bloom_filter"](spark, sf_dir).collect()
 
     li = _load(spark, sf_dir, "lineitem")
-    plain = _scratch("lineitem_bloom_control")
+    plain = scratch_path("lineitem_bloom_control")
     (
         li.select("l_suppkey", "l_extendedprice")
         .sort("l_suppkey")
@@ -457,7 +457,7 @@ def test_parquet_bloom_filter_lands_on_disk(spark, sf_dir):
             if f.endswith(".parquet")
         )
 
-    bloom_b = _bytes(_scratch("lineitem_bloom"))
+    bloom_b = _bytes(scratch_path("lineitem_bloom"))
     plain_b = _bytes(plain)
     assert bloom_b > plain_b + 1000, (
         f"bloom-enabled write ({bloom_b} B) not larger than control "
@@ -677,7 +677,7 @@ def test_analyzed_catalog_stats_drive_planning(spark, sf_dir):
     stats-driven decision a 100 TB planner lives on."""
     from pyspark.sql import functions as F
 
-    from hive_task_spark.sources.readers import _scratch
+    from hive_task_spark.scratch import scratch_path
 
     # the op creates + analyzes the PID-keyed CBO stats table
     from hive_task_spark.operators.workloads import cbo_stats_table_name
@@ -691,7 +691,7 @@ def test_analyzed_catalog_stats_drive_planning(spark, sf_dir):
     )
     (
         nation.write.mode("overwrite")
-        .option("path", _scratch("cbo_dim_tbl"))
+        .option("path", scratch_path("cbo_dim_tbl"))
         .saveAsTable("htspark_cbo_dim")
     )
     spark.sql("ANALYZE TABLE htspark_cbo_dim COMPUTE STATISTICS")

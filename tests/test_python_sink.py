@@ -13,7 +13,7 @@ import os
 
 import pytest
 
-from hive_task_spark.scratch import scratch_path
+from hive_task_spark.scratch import fresh_scratch
 from hive_task_spark.sources.readers import (
     _JsonLinesSink,
     _JsonLinesWriter,
@@ -39,11 +39,7 @@ class _FailingWriter(_JsonLinesWriter):
 
 
 def test_successful_write_publishes_manifest(spark):
-    path = scratch_path("pysink_commit_ok")
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
+    path = fresh_scratch("pysink_commit_ok")
     spark.dataSource.register(_JsonLinesSink)
     df = spark.range(100).selectExpr("id", "id * 3 AS trip")
     df.repartition(4).write.format("pyjsonlsink").option("path", path).mode(
@@ -62,11 +58,7 @@ def test_successful_write_publishes_manifest(spark):
 
 
 def test_failed_partition_aborts_without_manifest(spark):
-    path = scratch_path("pysink_abort")
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
+    path = fresh_scratch("pysink_abort")
     spark.dataSource.register(_FailingSink)
     df = spark.range(100).selectExpr("id", "id * 3 AS trip")
     with pytest.raises(Exception, match="simulated partition egress failure"):
@@ -90,11 +82,7 @@ def test_commit_publishes_winner_and_sweeps_zombie_attempt(spark):
     attempt files exist for partition 0 (a zombie retry lost the
     race); the commit message names the winner. Only the winner's
     bytes are published; the zombie's staged file is swept."""
-    import shutil
-
-    path = scratch_path("pysink_zombie")
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
+    path = fresh_scratch("pysink_zombie")
     winner = os.path.join(path, ".part-00000-7.json.staged")
     zombie = os.path.join(path, ".part-00000-3.json.staged")
     with open(winner, "w") as fh:
@@ -235,13 +223,9 @@ def test_stream_sink_abort_sweeps_staged_publishes_nothing(tmp_path):
 def test_arrow_writer_publishes_parquet_shards(spark):
     """The Arrow-native sink shares the two-phase commit machinery:
     parquet finals + manifest on success, no staged leftovers."""
-    import shutil
-
     from hive_task_spark.sources.readers import _ArrowParquetSink
 
-    path = scratch_path("pysink_arrow_ok")
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
+    path = fresh_scratch("pysink_arrow_ok")
     spark.dataSource.register(_ArrowParquetSink)
     df = spark.range(100).selectExpr("id", "id * 3 AS trip")
     df.repartition(4).write.format("pyarrowparquetsink").option(

@@ -79,3 +79,20 @@ def test_own_pid_dir_never_reaped(tmp_path, monkeypatch):
     _age(mine)
     S._reap_stale_pid_dirs()
     assert os.path.exists(mine)
+
+
+def test_fresh_scratch_returns_an_empty_dir_under_own_root(tmp_path, monkeypatch):
+    # a stale file and a nested dir are cleared on every call, the
+    # second call (over the first call's leftovers) included
+    monkeypatch.setattr(S, "_BASE", str(tmp_path))
+    monkeypatch.setattr(S, "_cleaned", True)
+    own_root = os.path.join(str(tmp_path), f"pid_{os.getpid()}")
+    for _ in range(2):
+        stale = S.scratch_path("ds")
+        os.makedirs(os.path.join(stale, "nested"), exist_ok=True)
+        for name in ("stale_file", os.path.join("nested", "f")):
+            with open(os.path.join(stale, name), "w") as f:
+                f.write("x")
+        path = S.fresh_scratch("ds")
+        assert path == os.path.join(own_root, "ds")
+        assert os.path.isdir(path) and os.listdir(path) == []
