@@ -31,6 +31,7 @@ registry.load_all()
 spark = get_session(app_name="kernel_import_probe", cpus=2)
 n = len(registry.QUERIES["multimodal_decode_features"](spark, {sf!r}).collect())
 print("ROWS:" + str(n))
+print("SOCKETS:" + spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir"))
 spark.stop()
 """
 
@@ -49,6 +50,11 @@ def test_kernels_unpickle_outside_the_checkout(tmp_path, sf_dir):
     assert proc.returncode == 0, proc.stderr[-2000:]
     rows = [ln for ln in proc.stdout.splitlines() if ln.startswith("ROWS:")]
     assert rows and int(rows[-1][5:]) > 0
+    # The workers' socket directory leaves with the driver process, and
+    # with it every socket file Spark did not remove itself.
+    sockets = [ln[8:] for ln in proc.stdout.splitlines() if ln.startswith("SOCKETS:")]
+    assert sockets and sockets[-1].startswith("/tmp/hts-")
+    assert not os.path.exists(sockets[-1])
 
 
 # Two runtime SQL keys no query or fixture sets: one is given a value
