@@ -18,11 +18,9 @@ right configuration posture.
     initial number high (e.g. 2000+) and let AQE shrink it.
   * Python workers — Unix-domain sockets in a short private directory,
     and the engine's own daemon module (``plans/pyworker.py``), which
-    stops each task re-reading Spark's archives. A Python task's fixed
-    cost falls by about three quarters (126 -> 35 ms from submit to the
-    function's start, 4-core VM). Every Python task of a session
-    built here therefore needs ``hive_task_spark`` importable on the
-    executors, not only the tasks whose kernel refers to the package.
+    stops each task re-reading Spark's archives. Every Python task of a
+    session built here therefore needs ``hive_task_spark`` importable on
+    the executors, not only the tasks whose kernel refers to the package.
     Sessions built elsewhere (the driver contract, ``tools/sweep.py``)
     keep Spark's stock TCP worker path, so the oracle sweeps cover
     both paths.
@@ -104,9 +102,7 @@ def get_session(
         # concurrent submissions; under default FIFO the tag is inert.
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
-        # A Unix socket spares a Python task the loopback-TCP wait for
-        # its first input batch, and the daemon module stops each task
-        # re-reading Spark's archives (see plans/pyworker.py).
+        # Python workers: see the module docstring.
         .config("spark.python.unix.domain.socket.enabled", "true")
         .config("spark.python.unix.domain.socket.dir", _socket_dir())
         .config("spark.python.daemon.module", "hive_task_spark.plans.pyworker")
