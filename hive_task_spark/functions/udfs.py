@@ -138,9 +138,7 @@ def udf_mapinpandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _make_expander():
-    """Python UDTF (table function): one input row → N output rows.
-    Built lazily so environments without @udtf (Spark < 3.5) degrade
-    at registration time, not import time."""
+    """Python UDTF (table function): one input row → N output rows."""
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="word: string, pos: int")
@@ -168,22 +166,14 @@ def udf_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (word, position) rows. The oracle is the engine-native equivalent
     (unnest) — also what the scale path should use; the UDTF surface is
     for generators SQL can't express."""
-    try:
-        expand = _make_expander()
-    except ImportError:  # Spark < 3.5 — explode-based equivalent
-        p = load(spark, sf_dir, "part").filter(F.col("p_partkey") <= 50)
-        return p.select(
-            "p_partkey",
-            F.posexplode(F.split("p_name", " ")).alias("pos", "word"),
-        ).select("p_partkey", "word", F.col("pos").cast("int").alias("pos"))
-    spark.udtf.register("ht_word_expand", expand)
-    load(spark, sf_dir, "part").createOrReplaceTempView("ht_part_v")
+    spark.udtf.register("ht_word_expand", _make_expander())
     return spark.sql(
         """
         SELECT p.p_partkey, t.word, t.pos
-        FROM ht_part_v p, LATERAL ht_word_expand(p.p_name) t
+        FROM {part} p, LATERAL ht_word_expand(p.p_name) t
         WHERE p.p_partkey <= 50
-        """
+        """,
+        part=load(spark, sf_dir, "part"),
     )
 
 
@@ -309,26 +299,14 @@ def udtf_polymorphic(spark: SparkSession, sf_dir: str) -> DataFrame:
     a static returnType cannot express. The oracle spells out the same
     integer chunk boundaries ((i*len)//n) with substr. Sharding a
     document column for fan-out embedding calls is the pipeline use."""
-    try:
-        chunker = _make_chunker()
-    except ImportError:  # pre-4.0 — static substring equivalent
-        d = load(spark, sf_dir, "documents").filter(F.col("doc_id") <= 50)
-        return d.selectExpr(
-            "doc_id",
-            "substr(text, 1, length(text) div 3) AS part_1",
-            "substr(text, length(text) div 3 + 1,"
-            " (2 * length(text)) div 3 - length(text) div 3) AS part_2",
-            "substr(text, (2 * length(text)) div 3 + 1,"
-            " length(text) - (2 * length(text)) div 3) AS part_3",
-        )
-    spark.udtf.register("ht_chunk_split", chunker)
-    load(spark, sf_dir, "documents").createOrReplaceTempView("ht_docs_chunk")
+    spark.udtf.register("ht_chunk_split", _make_chunker())
     return spark.sql(
         """
         SELECT d.doc_id, t.part_1, t.part_2, t.part_3
-        FROM ht_docs_chunk d, LATERAL ht_chunk_split(d.text, 3) t
+        FROM {documents} d, LATERAL ht_chunk_split(d.text, 3) t
         WHERE d.doc_id <= 50
-        """
+        """,
+        documents=load(spark, sf_dir, "documents"),
     )
 
 
@@ -558,14 +536,14 @@ def udtf_table_partition_arg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield self.uid, self.n, self.trans
 
     spark.udtf.register("ht_transitions_udtf", _Transitions)
-    load(spark, sf_dir, "events").createOrReplaceTempView("ht_evt_udtf")
     return spark.sql(
         """
         SELECT * FROM ht_transitions_udtf(
-            TABLE(SELECT user_id, event_type, ts, event_id FROM ht_evt_udtf)
+            TABLE(SELECT user_id, event_type, ts, event_id FROM {events})
             PARTITION BY user_id ORDER BY (ts, event_id)
         )
-        """
+        """,
+        events=load(spark, sf_dir, "events"),
     )
 
 

@@ -312,8 +312,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     with grouping() flags distinguishing real NULLs from subtotal rows.
     Spark expands the sets into a single shuffle (Expand node) — one
     pass over the fact regardless of set count."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("ht_orders_gs")
-    load(spark, sf_dir, "customer").createOrReplaceTempView("ht_customer_gs")
     return spark.sql(
         """
         SELECT
@@ -323,10 +321,12 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                                          AS gid,
             count(*)                     AS n_orders,
             sum(o_totalprice)            AS total_price
-        FROM ht_orders_gs o JOIN ht_customer_gs c ON o.o_custkey = c.c_custkey
+        FROM {orders} o JOIN {customer} c ON o.o_custkey = c.c_custkey
         GROUP BY GROUPING SETS ((c_mktsegment), (o_orderpriority),
                                 (c_mktsegment, o_orderpriority), ())
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
+        customer=load(spark, sf_dir, "customer"),
     )
 
 
@@ -544,17 +544,16 @@ def agg_listagg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY). The WITHIN GROUP ordering makes the concatenation
     deterministic under any partitioning — the property that makes
     string aggregation usable at all in a distributed engine."""
-    n = load(spark, sf_dir, "nation")
-    n.createOrReplaceTempView("ht_nation_la")
     return spark.sql(
         """
         SELECT n_regionkey,
                listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS names_csv,
                listagg(DISTINCT substr(n_name, 1, 1), '')
                    WITHIN GROUP (ORDER BY substr(n_name, 1, 1))    AS initials
-        FROM ht_nation_la
+        FROM {nation}
         GROUP BY n_regionkey
-        """
+        """,
+        nation=load(spark, sf_dir, "nation"),
     )
 
 
@@ -1236,8 +1235,6 @@ def agg_grouping_id_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     four sets expand in ONE Expand+shuffle pass, the same physical
     shape as cube/rollup; the flags are plan metadata, costing
     nothing."""
-    li = load(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("ht_li_gid")
     return spark.sql(
         """
         SELECT coalesce(l_returnflag, '<all>')  AS rf,
@@ -1245,10 +1242,11 @@ def agg_grouping_id_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(grouping(l_returnflag) AS BIGINT) AS g_rf,
                CAST(grouping(l_linestatus) AS BIGINT) AS g_ls,
                CAST(count(*) AS BIGINT) AS n
-        FROM ht_li_gid
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
                                 (l_returnflag), (l_linestatus), ())
-        """
+        """,
+        lineitem=load(spark, sf_dir, "lineitem"),
     )
 
 
@@ -1270,8 +1268,6 @@ def agg_percentile_cont_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a single sort-based aggregate per group; at 100 TB swap in
     approx_percentile and keep disc semantics via the sketch's
     nearest-rank read-out."""
-    li = load(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("ht_li_pct")
     return spark.sql(
         """
         SELECT l_returnflag,
@@ -1283,8 +1279,9 @@ def agg_percentile_cont_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
                    AS p90_cont_r,
                percentile_disc(0.9) WITHIN GROUP (ORDER BY l_quantity)
                    AS p90_disc
-        FROM ht_li_pct GROUP BY l_returnflag
-        """
+        FROM {lineitem} GROUP BY l_returnflag
+        """,
+        lineitem=load(spark, sf_dir, "lineitem"),
     )
 
 

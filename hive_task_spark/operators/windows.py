@@ -340,16 +340,16 @@ def window_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     with no tiebreak). Distinct from window_range_frame (numeric
     band) and window_running_total (row frame). One customer-keyed
     exchange; the frame scan is linear per partition."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("ht_orders_trf")
     return spark.sql(
         """
         SELECT o_orderkey, o_custkey,
                CAST(count(*) OVER w AS BIGINT)    AS n_7d,
                round(sum(o_totalprice) OVER w, 2) AS sum_7d_r
-        FROM ht_orders_trf
+        FROM {orders}
         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate
                      RANGE BETWEEN INTERVAL 7 DAYS PRECEDING AND CURRENT ROW)
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
 
 

@@ -191,21 +191,19 @@ def sql_hiveql_interface(spark: SparkSession, sf_dir: str) -> DataFrame:
     into key tokens per event type — the query text is the operator
     here; DISTRIBUTE/SORT BY shape partitioning without changing
     results (the value-hash is order-insensitive)."""
-    from hive_task_spark.tables import load
-
-    load(spark, sf_dir, "events").createOrReplaceTempView("ht_events_hql")
     return spark.sql(
         """
         SELECT event_type, prop_key, count(*) AS n
         FROM (
             SELECT e.event_type, trim(split(kv, ':')[0]) AS prop_key
-            FROM ht_events_hql e
+            FROM {events} e
             LATERAL VIEW explode(split(e.props, ',')) t AS kv
             WHERE e.event_id < 500
             DISTRIBUTE BY event_type SORT BY event_type
         )
         GROUP BY event_type, prop_key
-        """
+        """,
+        events=load(spark, sf_dir, "events"),
     )
 
 
@@ -420,15 +418,18 @@ def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_LATERAL_TOPK = """
     SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-    FROM customer c,
-    LATERAL (SELECT o_orderkey, o_totalprice FROM orders o
+    FROM {customer} c,
+    LATERAL (SELECT o_orderkey, o_totalprice FROM {orders} o
              WHERE o.o_custkey = c.c_custkey
              ORDER BY o_totalprice DESC, o_orderkey
              LIMIT 2) t
 """
 
 
-@register("sql_lateral_topk", oracle=_SQL_LATERAL_TOPK)
+@register(
+    "sql_lateral_topk",
+    oracle=_SQL_LATERAL_TOPK.format(customer="customer", orders="orders"),
+)
 def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery with per-row ORDER BY + LIMIT —
     top-2 orders per customer written the declarative way. Catalyst
@@ -436,23 +437,28 @@ def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hand-written window_topk_per_group builds); the IDENTICAL SQL
     text runs on DuckDB as the oracle. Proves the SQL surface accepts
     lateral correlation, not just the DataFrame rewrites."""
-    load(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_SQL_LATERAL_TOPK)
+    return spark.sql(
+        _SQL_LATERAL_TOPK,
+        customer=load(spark, sf_dir, "customer"),
+        orders=load(spark, sf_dir, "orders"),
+    )
 
 
 _SQL_CORRELATED_EXISTS = """
     SELECT c.c_custkey, c.c_mktsegment
-    FROM customer c
+    FROM {customer} c
     WHERE EXISTS (
-        SELECT 1 FROM orders o
+        SELECT 1 FROM {orders} o
         WHERE o.o_custkey = c.c_custkey
-          AND o.o_totalprice > (SELECT avg(o_totalprice) FROM orders)
+          AND o.o_totalprice > (SELECT avg(o_totalprice) FROM {orders})
     )
 """
 
 
-@register("sql_correlated_exists", oracle=_SQL_CORRELATED_EXISTS)
+@register(
+    "sql_correlated_exists",
+    oracle=_SQL_CORRELATED_EXISTS.format(customer="customer", orders="orders"),
+)
 def sql_correlated_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS with a nested uncorrelated scalar subquery,
     executed as RAW SQL — Catalyst decorrelates to a semi-join against
@@ -460,9 +466,11 @@ def sql_correlated_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is exactly the manual rewrite in q22/q4. Identical text is
     the DuckDB oracle. The declarative path and the DataFrame rewrite
     path are both first-class."""
-    load(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_SQL_CORRELATED_EXISTS)
+    return spark.sql(
+        _SQL_CORRELATED_EXISTS,
+        customer=load(spark, sf_dir, "customer"),
+        orders=load(spark, sf_dir, "orders"),
+    )
 
 
 _SQL_RECURSIVE_CHAIN = """
@@ -529,7 +537,6 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_task_spark.plans.checkpoints import checkpoint_conservative
 
     k_hops = 8
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     leads = ",\n               ".join(
         f"lead(o_orderkey, {i})   OVER w AS nk{i}, "
         f"lead(o_totalprice, {i}) OVER w AS np{i}"
@@ -540,11 +547,11 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT o_custkey, o_orderkey, o_totalprice,
                {leads},
                row_number()       OVER w AS rn
-        FROM orders
+        FROM {{orders}}
         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
-    checkpoint_conservative(edges).createOrReplaceTempView("htspark_rec_edges")
     # nested per-hop rounds, hop-by-hop in chain order (bit-identical
     # to the one-hop recursion's cum sequence)
     cum = "c.cum"
@@ -567,13 +574,13 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH RECURSIVE chain AS (
             SELECT o_custkey AS ck, o_orderkey AS ok, CAST(1 AS BIGINT) AS depth,
                    round(o_totalprice, 2) AS cum
-            FROM htspark_rec_edges WHERE rn = 1
+            FROM {{edges}} WHERE rn = 1
             UNION ALL
             SELECT c.ck,
                    CASE {longest} END,
                    c.depth + CASE {hops} END,
                    CASE {cum_case} END
-            FROM chain c JOIN htspark_rec_edges e ON e.o_orderkey = c.ok
+            FROM chain c JOIN {{edges}} e ON e.o_orderkey = c.ok
             WHERE e.nk1 IS NOT NULL
         )
         SELECT ck AS c_custkey,
@@ -581,7 +588,8 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(max(cum), 2)         AS total_spend
         FROM chain
         GROUP BY ck
-        """
+        """,
+        edges=checkpoint_conservative(edges),
     )
 
 
@@ -611,16 +619,16 @@ def sql_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushdown preserved). The DuckDB oracle expands through CTEs; all
     rounds sit at each value's exact decimal grain (2dp price -> 3dp
     discounted -> 5dp tax) per the half-boundary rule."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("ht_orders_lca")
     return spark.sql(
         """
         SELECT o_orderkey,
                round(o_totalprice * 0.9, 3)   AS discounted,
                round(discounted * 0.07, 5)    AS tax_due,
                round(discounted + tax_due, 5) AS final_price
-        FROM ht_orders_lca
+        FROM {orders}
         WHERE o_totalprice > 100000
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
 
 
@@ -641,17 +649,17 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     typed literals in the plan (constant-folded, pushed down like any
     literal), never concatenated text, which is both the injection-
     safe and the plan-cache-friendly form."""
-    load(spark, sf_dir, "customer").createOrReplaceTempView("ht_customer_prm")
     return spark.sql(
         """
         SELECT c_mktsegment,
                CAST(count(*) AS BIGINT) AS n_custs,
                round(sum(c_acctbal), 2) AS total_bal_r
-        FROM ht_customer_prm
+        FROM {customer}
         WHERE c_acctbal >= :min_bal AND c_mktsegment IN (:seg1, :seg2)
         GROUP BY c_mktsegment
         """,
         args={"min_bal": 1000.0, "seg1": "BUILDING", "seg2": "MACHINERY"},
+        customer=load(spark, sf_dir, "customer"),
     )
 
 
@@ -675,7 +683,6 @@ def sql_native_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis errors instead of silent string literals. DuckDB's
     UNPIVOT spelling differs (ON/INTO NAME/VALUE) — the semantic is
     identical."""
-    load(spark, sf_dir, "customer").createOrReplaceTempView("ht_customer_upv")
     return spark.sql(
         """
         SELECT c_mktsegment, metric, val
@@ -683,9 +690,10 @@ def sql_native_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
                      floor(CAST(sum(CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)) AS DOUBLE) * 1e4 / count(*) + 0.5) / 1e6 AS avg_bal,
                      round(min(c_acctbal), 2) AS min_bal,
                      round(max(c_acctbal), 2) AS max_bal
-              FROM ht_customer_upv GROUP BY c_mktsegment)
+              FROM {customer} GROUP BY c_mktsegment)
         UNPIVOT (val FOR metric IN (avg_bal, min_bal, max_bal))
-        """
+        """,
+        customer=load(spark, sf_dir, "customer"),
     )
 
 
@@ -708,7 +716,7 @@ def sql_ctas_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics, catalog resolution) preserves values end-to-end. The
     same two statements against a metastore are the nightly summary-
     table refresh."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("ht_orders_ctas_src")
+    orders = load(spark, sf_dir, "orders")
     spark.sql("DROP TABLE IF EXISTS htspark_ctas_summary")
     path = fresh_scratch("ctas_summary_tbl")
     spark.sql(
@@ -716,17 +724,19 @@ def sql_ctas_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
         CREATE TABLE htspark_ctas_summary
         USING parquet LOCATION '{path}'
         AS SELECT o_orderstatus, count(*) AS pn, sum(o_totalprice) AS ptotal
-           FROM ht_orders_ctas_src WHERE year(o_orderdate) < 1997
+           FROM {{orders}} WHERE year(o_orderdate) < 1997
            GROUP BY o_orderstatus
-        """
+        """,
+        orders=orders,
     )
     spark.sql(
         """
         INSERT INTO htspark_ctas_summary
         SELECT o_orderstatus, count(*) AS pn, sum(o_totalprice) AS ptotal
-        FROM ht_orders_ctas_src WHERE year(o_orderdate) >= 1997
+        FROM {orders} WHERE year(o_orderdate) >= 1997
         GROUP BY o_orderstatus
-        """
+        """,
+        orders=orders,
     )
     return spark.sql(
         """
@@ -778,16 +788,16 @@ def sql_udf_library(spark: SparkSession, sf_dir: str) -> DataFrame:
         RETURN concat(CAST(year(d) AS STRING), '-Q', CAST(quarter(d) AS STRING))
         """
     )
-    load(spark, sf_dir, "orders").createOrReplaceTempView("ht_orders_sqludf")
     return spark.sql(
         """
         SELECT ht_size_bucket(o_totalprice)  AS size_bucket,
                ht_year_quarter(o_orderdate)  AS yq,
                CAST(count(*) AS BIGINT)      AS n_orders,
                round(sum(o_totalprice), 2)   AS total_r
-        FROM ht_orders_sqludf
+        FROM {orders}
         GROUP BY 1, 2
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
 
 
@@ -821,15 +831,15 @@ def sql_table_function(spark: SparkSession, sf_dir: str) -> DataFrame:
         RETURN SELECT explode(sequence(1, n)) AS k, round(total / n, 4) AS amount
         """
     )
-    load(spark, sf_dir, "orders").createOrReplaceTempView("ht_orders_tvf")
     return spark.sql(
         """
         SELECT o.o_orderkey, t.k, t.amount
-        FROM ht_orders_tvf o,
+        FROM {orders} o,
              LATERAL ht_installments(o.o_totalprice,
                                      CAST(1 + o.o_orderkey % 3 AS INT)) t
         WHERE o.o_orderkey <= 500
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
 
 
@@ -850,13 +860,13 @@ def sql_native_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single partial+final hash aggregate over filtered counts —
     exactly the filtered-agg formulation the oracle spells out, so the
     rotation is free at any scale."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("ht_li_pivot")
     return spark.sql(
         """
-        SELECT * FROM (SELECT l_returnflag, l_linestatus FROM ht_li_pivot)
+        SELECT * FROM (SELECT l_returnflag, l_linestatus FROM {lineitem})
         PIVOT (CAST(count(*) AS BIGINT)
                FOR l_linestatus IN ('O' AS st_o, 'F' AS st_f))
-        """
+        """,
+        lineitem=load(spark, sf_dir, "lineitem"),
     )
 
 
@@ -875,15 +885,15 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate select item becomes a grouping key — the exact same SQL
     text runs on BOTH engines here, so the oracle is literal. Resolves
     at analysis time to an ordinary partial+final hash aggregate."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("ht_orders_gba")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority,
                CAST(count(*) AS BIGINT)    AS n_orders,
                round(sum(o_totalprice), 2) AS total_r
-        FROM ht_orders_gba
+        FROM {orders}
         GROUP BY ALL
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
 
 
@@ -903,17 +913,22 @@ def sql_identifier_template(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-tenant table names. The identifier binds at analysis time, so
     the optimized plan is indistinguishable from the literal query
     (broadcast dim join here)."""
+    # IDENTIFIER() names catalog objects, so this query keeps its views.
     load(spark, sf_dir, "customer").createOrReplaceTempView("ht_cust_idf")
     load(spark, sf_dir, "nation").createOrReplaceTempView("ht_nat_idf")
-    return spark.sql(
-        """
-        SELECT n_name, CAST(count(*) AS BIGINT) AS n_customers
-        FROM IDENTIFIER(:cust_tbl) JOIN IDENTIFIER(:nat_tbl)
-             ON c_nationkey = n_nationkey
-        GROUP BY n_name
-        """,
-        args={"cust_tbl": "ht_cust_idf", "nat_tbl": "ht_nat_idf"},
-    )
+    try:
+        return spark.sql(
+            """
+            SELECT n_name, CAST(count(*) AS BIGINT) AS n_customers
+            FROM IDENTIFIER(:cust_tbl) JOIN IDENTIFIER(:nat_tbl)
+                 ON c_nationkey = n_nationkey
+            GROUP BY n_name
+            """,
+            args={"cust_tbl": "ht_cust_idf", "nat_tbl": "ht_nat_idf"},
+        )
+    finally:
+        spark.catalog.dropTempView("ht_cust_idf")
+        spark.catalog.dropTempView("ht_nat_idf")
 
 
 @register(
@@ -931,14 +946,14 @@ def sql_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     binds — the stored-procedure-style escape hatch for query text
     assembled at runtime, with values passed as real parameters (no
     string splicing). Plans identically to the static statement."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("ht_orders_exi")
     return spark.sql(
         """
         EXECUTE IMMEDIATE
           'SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_open
-           FROM ht_orders_exi WHERE o_orderstatus = ? GROUP BY o_orderpriority'
+           FROM {orders} WHERE o_orderstatus = ? GROUP BY o_orderpriority'
           USING 'O'
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
 
 
@@ -960,14 +975,14 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     at analysis, so predicate pushdown still sees a constant."""
     spark.sql("DECLARE OR REPLACE VARIABLE ht_bal_floor DOUBLE DEFAULT 0.0")
     spark.sql("SET VARIABLE ht_bal_floor = 5000.0")
-    load(spark, sf_dir, "customer").createOrReplaceTempView("ht_cust_var")
     return spark.sql(
         """
         SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_rich
-        FROM ht_cust_var
+        FROM {customer}
         WHERE c_acctbal >= ht_bal_floor
         GROUP BY c_mktsegment
-        """
+        """,
+        customer=load(spark, sf_dir, "customer"),
     )
 
 
@@ -991,19 +1006,24 @@ def sql_masked_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     macros: the optimized plan is identical to inlining the
     expressions, so masking costs nothing at any scale and predicate
     pushdown still reaches the scan through the view."""
+    # A SQL view re-resolves its body by name on read: it needs a named source.
     load(spark, sf_dir, "customer").createOrReplaceTempView("ht_cust_mask_src")
-    spark.sql(
-        """
-        CREATE OR REPLACE TEMPORARY VIEW ht_customer_masked AS
-        SELECT concat(substr(c_name, 1, 4), '***')       AS masked_name,
-               md5(CAST(c_custkey AS STRING))            AS stable_key,
-               c_mktsegment,
-               CAST(floor(c_acctbal / 1000) AS BIGINT)   AS bal_band
-        FROM ht_cust_mask_src
-        WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')
-        """
-    )
-    return spark.sql("SELECT * FROM ht_customer_masked")
+    try:
+        spark.sql(
+            """
+            CREATE OR REPLACE TEMPORARY VIEW ht_customer_masked AS
+            SELECT concat(substr(c_name, 1, 4), '***')       AS masked_name,
+                   md5(CAST(c_custkey AS STRING))            AS stable_key,
+                   c_mktsegment,
+                   CAST(floor(c_acctbal / 1000) AS BIGINT)   AS bal_band
+            FROM ht_cust_mask_src
+            WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')
+            """
+        )
+        return spark.sql("SELECT * FROM ht_customer_masked")
+    finally:
+        spark.catalog.dropTempView("ht_customer_masked")
+        spark.catalog.dropTempView("ht_cust_mask_src")
 
 
 @register(
@@ -1027,7 +1047,6 @@ def sql_distribute_cluster_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle): the dialect controls WHERE rows live, never WHAT they
     are. This is the idiom Hive shops use to pre-cluster writes for
     bucketed downstream joins."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("ht_li_cluster")
     return spark.sql(
         """
         SELECT l_suppkey,
@@ -1035,12 +1054,13 @@ def sql_distribute_cluster_by(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(sum(l_extendedprice), 2) AS total_r
         FROM (
             SELECT l_suppkey, l_extendedprice
-            FROM ht_li_cluster
+            FROM {lineitem}
             WHERE l_quantity >= 30
             CLUSTER BY l_suppkey
         )
         GROUP BY l_suppkey
-        """
+        """,
+        lineitem=load(spark, sf_dir, "lineitem"),
     )
 
 
@@ -1065,10 +1085,9 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     that equivalent in classic ANSI form). Dialect sugar only — same
     pushdown, same partial+final aggregate, same
     TakeOrderedAndProject."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("ht_orders_pipe")
     return spark.sql(
         """
-        FROM ht_orders_pipe
+        FROM {orders}
         |> WHERE o_orderstatus = 'F'
         |> AGGREGATE CAST(count(*) AS BIGINT) AS n_orders,
                      round(sum(o_totalprice), 2) AS total_r
@@ -1076,7 +1095,8 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
         |> ORDER BY n_orders DESC, o_orderpriority
         |> LIMIT 3
         |> SELECT o_orderpriority, n_orders, total_r
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
 
 
@@ -1166,18 +1186,17 @@ def sql_join_hints_shuffle_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANSI SQL); tests/test_plans.py asserts each hint (BROADCAST /
     MERGE / SHUFFLE_HASH) actually lands its physical operator, so
     the surface is proven, not assumed."""
-    from hive_task_spark.tables import register_views
-
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT /*+ SHUFFLE_HASH(c) */
                c.c_mktsegment AS mktsegment,
                CAST(count(*) AS BIGINT) AS n_orders,
                round(sum(o.o_totalprice), 2) AS total_r
-        FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+        FROM {orders} o JOIN {customer} c ON o.o_custkey = c.c_custkey
         GROUP BY c.c_mktsegment
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
+        customer=load(spark, sf_dir, "customer"),
     )
 
 
@@ -1203,21 +1222,19 @@ def sql_values_inline_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     LocalRelation and broadcasts it for free. The idiom for small
     business mappings that belong in code review, not in a table
     nobody versions. Identical SQL text runs on both engines."""
-    from hive_task_spark.tables import register_views
-
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT t.tier,
                CAST(count(*) AS BIGINT) AS n_orders,
                round(sum(o.o_totalprice), 2) AS total_r
-        FROM orders o
+        FROM {orders} o
         JOIN (VALUES ('1-URGENT', 'P0'), ('2-HIGH', 'P1'),
                      ('3-MEDIUM', 'P2'), ('4-NOT SPECIFIED', 'P3'),
                      ('5-LOW', 'P3')) AS t(prio, tier)
           ON o.o_orderpriority = t.prio
         GROUP BY t.tier
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
 
 
@@ -1239,16 +1256,16 @@ def sql_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploratory rollup. The sort runs over the aggregate's tiny
     output (|status|×|priority| rows), so the global order is free;
     the point is surface parity for the dialect feature."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("ht_ord_oba")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority,
                CAST(count(*) AS BIGINT) AS n_orders,
                floor(CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS DOUBLE) * 100 / count(*) + 0.5) / 1e4 AS avg_price_r
-        FROM ht_ord_oba
+        FROM {orders}
         GROUP BY ALL
         ORDER BY ALL
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
 
 
@@ -1276,22 +1293,22 @@ def sql_scripting_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     the CTE form (the oracle); the feature under test is the
     scripting surface itself, and percentile interpolation matches
     cross-engine."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("ht_ord_script")
     return spark.sql(
         """
         BEGIN
           DECLARE cutoff DOUBLE DEFAULT 0.0;
           SET cutoff = (SELECT percentile(o_totalprice, 0.9)
-                        FROM ht_ord_script);
+                        FROM {orders});
           SELECT o_orderpriority,
                  CAST(count(*) AS BIGINT) AS n_top_orders,
                  round(sum(o_totalprice), 2) AS top_revenue_r,
                  round(max(cutoff), 2) AS cutoff_r
-          FROM ht_ord_script
+          FROM {orders}
           WHERE o_totalprice > cutoff
           GROUP BY o_orderpriority;
         END
-        """
+        """,
+        orders=load(spark, sf_dir, "orders"),
     )
 
 

@@ -66,21 +66,19 @@ def create_tables(spark: SparkSession, sf_dir: str) -> dict[str, int]:
     """Phase 1 of the persistence demo: CTAS a plain table and a
     PARTITIONED table into the Hive metastore from the test parquet.
     Returns row counts for the writer-side assertion."""
-    nation = load(spark, sf_dir, "nation")
-    nation.createOrReplaceTempView("nation_src")
     spark.sql("DROP TABLE IF EXISTS hive_nation")
     spark.sql(
         "CREATE TABLE hive_nation USING PARQUET AS "
-        "SELECT n_nationkey, n_name, n_regionkey FROM nation_src"
+        "SELECT n_nationkey, n_name, n_regionkey FROM {nation}",
+        nation=load(spark, sf_dir, "nation"),
     )
-    orders = load(spark, sf_dir, "orders")
-    orders.selectExpr(
-        "o_orderkey", "o_totalprice", "CAST(year(o_orderdate) AS INT) AS o_year"
-    ).createOrReplaceTempView("orders_src")
     spark.sql("DROP TABLE IF EXISTS hive_orders_by_year")
     spark.sql(
         "CREATE TABLE hive_orders_by_year USING PARQUET "
-        "PARTITIONED BY (o_year) AS SELECT * FROM orders_src"
+        "PARTITIONED BY (o_year) AS SELECT * FROM {orders}",
+        orders=load(spark, sf_dir, "orders").selectExpr(
+            "o_orderkey", "o_totalprice", "CAST(year(o_orderdate) AS INT) AS o_year"
+        ),
     )
     return {
         "nation": spark.table("hive_nation").count(),
@@ -129,11 +127,11 @@ def hiveql_transform(spark: SparkSession, sf_dir: str) -> list[tuple]:
     legacy path — Arrow-batched ``mapInPandas`` (functions/udfs.py)
     does the same job 10-100x faster — but the surface must exist for
     HiveQL workloads to port."""
-    load(spark, sf_dir, "nation").createOrReplaceTempView("nation_t")
     out = spark.sql(
         "SELECT TRANSFORM(n_nationkey, n_name) "
         "USING '/bin/cat' AS (k STRING, name STRING) "
-        "FROM nation_t"
+        "FROM {nation}",
+        nation=load(spark, sf_dir, "nation"),
     )
     return sorted((int(r.k), r.name) for r in out.collect())
 

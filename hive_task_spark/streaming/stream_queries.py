@@ -84,12 +84,15 @@ def _run_to_table(
     spark: SparkSession, sdf: DataFrame, name: str, output_mode: str
 ) -> DataFrame:
     """Drain into a memory sink named `name`, checkpointed fresh at
-    `cp_<name>`; return the materialized batch DataFrame."""
+    `cp_<name>`; return the materialized batch DataFrame. The sink's
+    temp view is dropped: the analyzed DataFrame still reads the sink."""
     _drain(
         sdf.writeStream.format("memory").queryName(name).outputMode(output_mode),
         fresh_scratch(f"cp_{name}"),
     )
-    return spark.table(name)
+    df = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return df
 
 
 def _staged_stream(
@@ -1034,6 +1037,7 @@ def stream_observe_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
         sdf.writeStream.format("memory").queryName(name).outputMode("append"),
         fresh_scratch(f"cp_{name}"),
     )
+    spark.catalog.dropTempView(name)
     n_events, total, mn, mx = 0, 0.0, None, None
     for p in q.recentProgress:
         m = p["observedMetrics"].get("health") if p["observedMetrics"] else None

@@ -22,9 +22,6 @@ TABLES = (
     "embeddings",
 )
 
-# Small dimensions that should always be broadcast in joins at any scale.
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
-
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
     """Coerce events.ts to TIMESTAMP regardless of how the parquet file
@@ -72,15 +69,10 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one test table; pins runtime conf (UTC) on first touch."""
+    """Read one test table; pins runtime conf (UTC) on every call
+    (through ``parquet_schema``)."""
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_events_ts(df)
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every table as a temp view for SQL-phrased queries."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -15,13 +15,20 @@ registry.load_all()
 ORACLE_NAMES = sorted(registry.ORACLES)
 
 
+def _temp_views(spark):
+    return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+
+
 @pytest.mark.parametrize("name", ORACLE_NAMES)
 def test_oracle_match(name, spark, oracle_con, sf_dir):
-    # A query may change session conf only for its own run: one that
-    # leaves it changed alters every query after it on a shared session.
+    # A query may change session conf or temporary views only for its
+    # own run: one that leaves either changed alters every query after
+    # it on a shared session.
     conf_before = apply_runtime_conf(spark).conf.getAll
+    views_before = _temp_views(spark)
     spark_pdf = registry.QUERIES[name](spark, sf_dir).toPandas()
     assert spark.conf.getAll == conf_before, "query left the session conf changed"
+    assert _temp_views(spark) == views_before, "query left temp views changed"
     oracle_pdf = oracle_con.execute(registry.ORACLES[name]).fetchdf()
     assert_frames_match(spark_pdf, oracle_pdf, name)
 

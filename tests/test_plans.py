@@ -403,17 +403,20 @@ def test_keyset_pagination_no_cartesian(spark, sf_dir):
 def test_join_hints_land_their_operators(spark, sf_dir):
     """Each join-strategy hint must produce its physical operator —
     the surface is proven, not assumed."""
-    from hive_task_spark.tables import register_views
+    from hive_task_spark.tables import load
 
-    register_views(spark, sf_dir)
     sql = """
         SELECT /*+ {hint} */ c.c_mktsegment, count(*) AS n
-        FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+        FROM {{orders}} o JOIN {{customer}} c ON o.o_custkey = c.c_custkey
         GROUP BY c.c_mktsegment
     """
 
     def plan_of(hint):
-        df = spark.sql(sql.format(hint=hint))
+        df = spark.sql(
+            sql.format(hint=hint),
+            orders=load(spark, sf_dir, "orders"),
+            customer=load(spark, sf_dir, "customer"),
+        )
         je = df._jdf.queryExecution()
         return je.explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -875,21 +878,33 @@ def test_recursive_cte_khop_equals_one_hop(spark, sf_dir):
     (b) max-over-subset == max-over-all-prefixes for increasing cums,
     both of which this equivalence witnesses end-to-end."""
     from hive_task_spark import registry
+    from hive_task_spark.tables import load
 
     out = {
         (r[0], r[1], r[2])
         for r in registry.QUERIES["sql_recursive_cte"](spark, sf_dir).collect()
     }
+    edges = spark.sql(
+        """
+        SELECT o_custkey, o_orderkey, o_totalprice,
+               lead(o_orderkey)   OVER w AS nk1,
+               lead(o_totalprice) OVER w AS np1,
+               row_number()       OVER w AS rn
+        FROM {orders}
+        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+        """,
+        orders=load(spark, sf_dir, "orders"),
+    )
     one_hop = spark.sql(
         """
         WITH RECURSIVE chain AS (
             SELECT o_custkey AS ck, o_orderkey AS ok,
                    CAST(1 AS BIGINT) AS depth,
                    round(o_totalprice, 2) AS cum
-            FROM htspark_rec_edges WHERE rn = 1
+            FROM {edges} WHERE rn = 1
             UNION ALL
             SELECT c.ck, e.nk1, c.depth + 1, round(c.cum + e.np1, 2)
-            FROM chain c JOIN htspark_rec_edges e ON e.o_orderkey = c.ok
+            FROM chain c JOIN {edges} e ON e.o_orderkey = c.ok
             WHERE e.nk1 IS NOT NULL
         )
         SELECT ck AS c_custkey,
@@ -897,7 +912,8 @@ def test_recursive_cte_khop_equals_one_hop(spark, sf_dir):
                round(max(cum), 2)         AS total_spend
         FROM chain
         GROUP BY ck
-        """
+        """,
+        edges=edges,
     )
     ref = {(r[0], r[1], r[2]) for r in one_hop.collect()}
     assert out == ref and len(out) > 0

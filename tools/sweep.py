@@ -24,6 +24,9 @@ vanilla` and one `full hostileconf`, at least one of them concurrent
 with the full pytest suite. Concurrency is safe: all scratch paths are
 PID-keyed (hive_task_spark/scratch.py).
 
+A failure after which the JVM no longer answers ends the sweep with
+one `JVM LOST` line and exit 1.
+
 SPARK_GRAFT_SWEEP_SF overrides the dataset (default sf0.01). Run
 `SPARK_GRAFT_SWEEP_SF=/root/testdata/sf0.1 python tools/sweep.py full
 vanilla` once per round: it samples a 10x bigger float-boundary
@@ -109,6 +112,13 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             fails.append((name, str(e)[:300]))
             print(f"FAIL {name}: {str(e)[:300]}", flush=True)
+            try:  # after a JVM death every later query would fail too
+                spark.sparkContext._jsc.sc().applicationId()
+            except Exception:  # noqa: BLE001
+                n = len(names)
+                print(f"JVM LOST at {name}: {i + 1}/{n} run, {n - i - 1} not run")
+                print(f"[{mode}/{conf}] fails so far: {fails}", flush=True)
+                return 1
         if (i + 1) % 50 == 0:
             print(f"... {i + 1}/{len(names)}", flush=True)
     print(
